@@ -18,11 +18,12 @@ import graft.SparkEntry
   * for `run.py` to reduce and check.
   *
   * Usage: PerfBench <workload> <seed> <seconds> <trace 0|1> <dataDir>
-  *   <outDir> <cores> <setups> <verifiedFile>
+  *   <outDir> <cores> <verifiedFile>
   *
   * `verifiedFile` lists results already checked against their oracle
   * (one [[verifiedKey]] a line); only results not listed there are
-  * written out for `run.py` to check.
+  * written out for `run.py` to check, and each written result is read
+  * back and digested, so that the digest checked is the one recorded.
   *
   * Timed per operation: the registry entry call (operator build),
   * `queryExecution.executedPlan` (Catalyst) and the forcing action,
@@ -33,13 +34,11 @@ import graft.SparkEntry
 object PerfBench {
   final case class Workload(entries: Seq[String], hooks: Seq[String])
 
-  /** The workloads. `rollup` and `ingest` are the measured pair (the
-    * read and the write path of the same hierarchy aggregation code);
-    * `iterate` is kept for ad-hoc runs of the graph loops that the Spark
-    * driver paces round by round.
-    * Every hook named here runs, timed on its own, in set-up. The
-    * rollup and stream entries read only some of the dimensions that
-    * `warmDims` builds; their first calls build and cache those. */
+  /** The workloads: the read and the write path of the same hierarchy
+    * aggregation code. Every hook named here runs, timed on its own, in
+    * set-up. The rollup and stream entries read only some of the
+    * dimensions that `warmDims` builds; their first calls build and
+    * cache those. */
   val workloads: Map[String, Workload] = Map(
     "rollup" -> Workload(
       Seq("h4_hier_agg", "h5_hier_agg_deep", "h6_hier_agg_parts",
@@ -49,16 +48,10 @@ object PerfBench {
     "ingest" -> Workload(
       Seq("st9_incremental_rollup_stream", "st41_stream_hier_rollup",
         "st42_stream_retraction", "st40_stream_quantile_mv"),
-      Seq("warmFixtures")),
-    "iterate" -> Workload(
-      Seq("g13_connected_components", "g17_landmark_closeness", "g5_kcore",
-        "g16_ktruss", "g8_bfs_hops", "d26_blocked_dup_clusters"),
-      Seq("warmEdges", "warmComponents")))
+      Seq("warmFixtures")))
 
   val hooks: Map[String, (SparkSession, String) => Unit] = Map(
-    "warmFixtures" -> graft.streaming.StreamingQueries.warmFixtures,
-    "warmEdges" -> graft.operators.GraphQueries.warmEdges,
-    "warmComponents" -> graft.operators.DedupQueries.warmComponents)
+    "warmFixtures" -> graft.streaming.StreamingQueries.warmFixtures)
 
   val SpanKey = "graftbench.span"
 
@@ -127,59 +120,54 @@ object PerfBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(name, seedS, secondsS, traceS, data, out, coresS, setupsS, verifiedFile) = args
+    val Array(name, seedS, secondsS, traceS, data, out, coresS, verifiedFile) = args
     val wl = workloads.getOrElse(name,
       throw new IllegalArgumentException(s"unknown workload $name"))
-    val (seed, seconds, traced) = (seedS.toLong, secondsS.toDouble, traceS == "1")
-    val (cores, setups) = (coresS.toInt, setupsS.toInt)
+    val (seed, seconds, traced, cores) =
+      (seedS.toLong, secondsS.toDouble, traceS == "1", coresS.toInt)
     val work = Paths.get(out).toAbsolutePath.toString
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
     val loadStart = os.getSystemLoadAverage
     val fns = wl.entries.map(e => e -> SparkEntry.queries(e)).toMap
 
-    // ---- set-up, repeated: session, warm hooks, first call of every entry
-    val setupRows = new JList[Any]()
-    val verified = mutable.LinkedHashMap.empty[String, (Long, Long)]
-    val unstable = mutable.Set.empty[String]
-    val firstDfs = mutable.LinkedHashMap.empty[String, DataFrame]
-    var spark: SparkSession = null
-    for (i <- 0 until setups) {
-      if (spark != null) { spark.stop(); SparkSession.clearActiveSession() }
-      val t0 = now()
-      spark = newSession(cores, work)
-      spark.read.parquet(s"$data/region.parquet").collect()
-      val tSession = now() - t0
-      val hookRows = new JMap[String, Any]()
-      wl.hooks.foreach { h =>
-        val (b0, h0) = (cachedBytes(spark), now())
-        hooks(h)(spark, data)
-        hookRows.put(h, jmap("s" -> (now() - h0),
-          "mb" -> (cachedBytes(spark) - b0) / 1e6))
-      }
-      val firstRows = new JMap[String, Any]()
-      wl.entries.foreach { e =>
-        val f0 = now()
-        val df = fns(e)(spark, data)
-        val got = force(df)
-        firstRows.put(e, now() - f0)
-        if (verified.get(e).exists(_ != got)) unstable += e
-        verified.getOrElseUpdate(e, got)
-        firstDfs(e) = df
-      }
-      val total = now() - t0
-      settle()
-      val cached = new JList[Any]()
-      cachedRdds(spark).foreach { i =>
-        cached.add(jmap("rdd" -> i.name, "partitions" -> i.numPartitions,
-          "cached_partitions" -> i.numCachedPartitions, "mb" -> (i.memSize + i.diskSize) / 1e6))
-      }
-      setupRows.add(jmap("total_s" -> total, "session_s" -> tSession,
-        "hooks" -> hookRows, "first_call_s" -> firstRows,
-        "cached_mb" -> cachedBytes(spark) / 1e6, "cached" -> cached))
-    }
+    // ---- set-up, in a cold JVM: session, warm hooks, first call of every entry
+    val t0 = now()
+    val spark = newSession(cores, work)
     val sc = spark.sparkContext
+    spark.read.parquet(s"$data/region.parquet").collect()
+    val tSession = now() - t0
+    val hookRows = new JMap[String, Any]()
+    wl.hooks.foreach { h =>
+      val (b0, h0) = (cachedBytes(spark), now())
+      hooks(h)(spark, data)
+      hookRows.put(h, jmap("s" -> (now() - h0), "mb" -> (cachedBytes(spark) - b0) / 1e6))
+    }
+    val firstRows = new JMap[String, Any]()
+    val verified = mutable.LinkedHashMap.empty[String, (Long, Long)]
+    val firstDfs = mutable.LinkedHashMap.empty[String, DataFrame]
+    wl.entries.foreach { e =>
+      val f0 = now()
+      val df = fns(e)(spark, data)
+      verified(e) = force(df)
+      firstRows.put(e, now() - f0)
+      firstDfs(e) = df
+    }
+    val setupS = now() - t0
+    val setupJitS = jit.getTotalCompilationTime / 1e3
+    settle()
+    val cached = new JList[Any]()
+    cachedRdds(spark).foreach { i =>
+      cached.add(jmap("rdd" -> i.name, "partitions" -> i.numPartitions,
+        "cached_partitions" -> i.numCachedPartitions, "mb" -> (i.memSize + i.diskSize) / 1e6))
+    }
+    val setup = jmap("total_s" -> setupS, "session_s" -> tSession, "jit_s" -> setupJitS,
+      "hooks" -> hookRows, "first_call_s" -> firstRows,
+      "cached_mb" -> cachedBytes(spark) / 1e6, "cached" -> cached)
 
-    // ---- results not yet checked against their oracle go to run.py
+    // ---- results not yet checked against their oracle go to run.py.
+    // Writing re-runs the DataFrame, so the written copy is digested
+    // again: only a copy equal to the recorded result may be checked.
     val known = {
       val f = Paths.get(verifiedFile)
       if (Files.exists(f)) Files.readAllLines(f).asScala.toSet else Set.empty[String]
@@ -190,9 +178,13 @@ object PerfBench {
       val sql = SparkEntry.oracleSql.getOrElse(e, "")
       val key = verifiedKey(e, n, h, sql)
       val fresh = !known(key)
-      if (fresh) firstDfs(e).coalesce(1).write.mode("overwrite").parquet(s"$work/verify/$e")
+      val written = if (!fresh) verified(e) else {
+        val dir = s"$work/verify/$e"
+        firstDfs(e).coalesce(1).write.mode("overwrite").parquet(dir)
+        force(spark.read.parquet(dir))
+      }
       verifiedJson.put(e, jmap("rows" -> n, "digest" -> h, "key" -> key, "sql" -> sql,
-        "needs_check" -> fresh, "stable" -> !unstable(e)))
+        "needs_check" -> fresh, "written_matches" -> (written == verified(e))))
     }
 
     // ---- the closed loop
@@ -200,7 +192,6 @@ object PerfBench {
     val ops = new JList[Any]()
     val passes = new JList[Any]()
     val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
     def gcSeconds(): Double = gcBeans.map(_.getCollectionTime).sum / 1e3
     def runPass(tracedPass: Boolean, record: Boolean = true): Unit = {
       val (p0, gc0, jit0) = (now(), gcSeconds(), jit.getTotalCompilationTime)
@@ -229,8 +220,8 @@ object PerfBench {
       if (record) passes.add(jmap("traced" -> tracedPass, "s" -> (now() - p0),
         "gc_s" -> (gcSeconds() - gc0), "jit_s" -> (jit.getTotalCompilationTime - jit0) / 1e3))
     }
-    // One untimed pass first: two set-ups have called each entry only
-    // twice, and the first timed pass would otherwise still pay for JIT.
+    // One untimed pass first: set-up has called each entry only once,
+    // and the first timed pass would otherwise still pay for JIT.
     runPass(tracedPass = false, record = false)
     // With trace on, passes alternate untraced / traced, so that both
     // halves see the same JVM warmth and the overhead compares like
@@ -265,7 +256,7 @@ object PerfBench {
       "load_start_jvm" -> loadStart, "load_end_jvm" -> os.getSystemLoadAverage,
       "jvm" -> s"${sys.props("java.vm.name")} ${sys.props("java.runtime.version")}",
       "spark" -> spark.version, "scala" -> scala.util.Properties.versionNumberString)
-    val result = jmap("provenance" -> provenance, "setup" -> setupRows,
+    val result = jmap("provenance" -> provenance, "setup" -> setup,
       "verified" -> verifiedJson, "ops" -> ops,
       "passes" -> passes, "trace" -> trace)
     new ObjectMapper().enable(SerializationFeature.INDENT_OUTPUT)

@@ -24,6 +24,22 @@ def median(values):
     return statistics.median(values) if values else 0.0
 
 
+def rel_iqr(values):
+    """Interquartile range over median, as `statistics.quantiles(n=4)`
+    gives the quartiles; 0 for fewer than two samples."""
+    if len(values) < 2:
+        return 0.0
+    q1, _, q3 = statistics.quantiles(values, n=4)
+    return (q3 - q1) / statistics.median(values)
+
+
+def coverage_band(overhead, spread):
+    """Where an entry's traced build + plan + exec over its untraced
+    latency should lie: between 1 and the run's tracing overhead,
+    widened on both sides by the entry's own sample spread."""
+    return min(1.0, overhead) - spread, max(1.0, overhead) + spread
+
+
 def end_to_end(raw, failed_entries):
     """The end-to-end metrics of the untraced part of a run, plus counts
     over all of it.
@@ -35,16 +51,15 @@ def end_to_end(raw, failed_entries):
     lat = [o["total_s"] for o in ops if not o["traced"]]
     failed = sum(1 for o in ops
                  if o["status"] != "ok" or o["entry"] in failed_entries)
-    setups = raw["setup"]
     metrics = {
         "query_p50_s": (median(lat), "s"),
         "pass_s": (median(passes), "s"),
-        "setup_s": (median([s["total_s"] for s in setups]), "s"),
-        "cached_mb": (median([s["cached_mb"] for s in setups]), "MB"),
+        "setup_s": (raw["setup"]["total_s"], "s"),
+        "cached_mb": (raw["setup"]["cached_mb"], "MB"),
         "ok_rate": (1.0 - failed / len(ops), "ratio"),
     }
     counts = {"attempted": len(ops), "failed": failed,
-              "samples": {"query": len(lat), "pass": len(passes), "setup": len(setups)}}
+              "samples": {"query": len(lat), "pass": len(passes), "setup": 1}}
     return metrics, counts
 
 
@@ -56,7 +71,12 @@ def _span_sum(labels, suffix, key):
 def per_layer(raw, cores):
     """Per-layer metrics of the traced passes of a run, per pass; the
     per-entry breakdown they summarise; and the tracing overhead, each
-    end-to-end timing of the traced passes against the untraced ones."""
+    end-to-end timing of the traced passes against the untraced ones.
+
+    Each entry's coverage, its traced build + plan + exec over its
+    untraced latency, is checked against the run's tracing overhead
+    (see `coverage_band`); `trace.uncovered_entries` counts the entries
+    that miss it."""
     tr = raw["trace"]
     labels, stream = tr["labels"], tr["stream"]
     t_ops = [o for o in raw["ops"] if o["traced"]]
@@ -65,7 +85,7 @@ def per_layer(raw, cores):
     t_pass = [p["s"] for p in t_passes]
     u_pass = [p["s"] for p in raw["passes"] if not p["traced"]]
     n = len(t_pass)
-    setups = raw["setup"]
+    setup = raw["setup"]
 
     def per_pass(x):
         return x / n
@@ -78,14 +98,14 @@ def per_layer(raw, cores):
 
     task_s = _span_sum(labels, None, "task_ms") / 1000
     m = {
-        "setup.session_s": median([s["session_s"] for s in setups]),
-        "setup.cold_s": setups[0]["total_s"],
-        "setup.first_call_s": median([sum(s["first_call_s"].values()) for s in setups]),
+        "setup.session_s": setup["session_s"],
+        "setup.jit_s": setup["jit_s"],
+        "setup.first_call_s": sum(setup["first_call_s"].values()),
     }
     for h in HOOKS:
-        rows = [s["hooks"][h] for s in setups if h in s["hooks"]]
-        m[f"artifacts.{h}_s"] = median([r["s"] for r in rows])
-        m[f"artifacts.{h}_mb"] = median([r["mb"] for r in rows])
+        hook = setup["hooks"].get(h, {"s": 0.0, "mb": 0.0})
+        m[f"artifacts.{h}_s"] = hook["s"]
+        m[f"artifacts.{h}_mb"] = hook["mb"]
     m.update({
         "operators.build_s": per_pass_phase("build_s"),
         "operators.build_jobs": per_pass(_span_sum(labels, "/build", "jobs")),
@@ -116,13 +136,24 @@ def per_layer(raw, cores):
         m[f"layers.{phase}_share"] = sum(o[f"{phase}_s"] for o in t_ops) / total
     m["layers.stream_share"] = sum(stream["batch_ms"]) / 1000 / total
 
+    overhead = {}
+    for name, traced, untraced in (
+            ("pass_s", median(t_pass), median(u_pass)),
+            ("query_p50_s", median([o["total_s"] for o in t_ops]),
+             median([o["total_s"] for o in u_ops]))):
+        overhead[name] = {"traced": traced, "untraced": untraced, "ratio": traced / untraced}
+
     entries = {}
     for e in sorted({o["entry"] for o in raw["ops"]}):
         mine = [o for o in t_ops if o["entry"] == e]
+        untraced = [o["total_s"] for o in u_ops if o["entry"] == e]
         calls = len(mine)
         d = {f"{ph}_s": median([o[f"{ph}_s"] for o in mine]) for ph in ("build", "plan", "exec")}
-        d["untraced_s"] = median([o["total_s"] for o in u_ops if o["entry"] == e])
+        d["untraced_s"] = median(untraced)
+        d["samples"] = {"traced": calls, "untraced": len(untraced)}
         d["coverage"] = (d["build_s"] + d["plan_s"] + d["exec_s"]) / d["untraced_s"]
+        d["coverage_band"] = coverage_band(overhead["query_p50_s"]["ratio"], rel_iqr(untraced))
+        d["coverage_ok"] = d["coverage_band"][0] <= d["coverage"] <= d["coverage_band"][1]
         for ph in ("build", "plan", "exec"):
             c = labels.get(f"{e}/{ph}", {})
             d[f"{ph}_jobs"] = c.get("jobs", 0) / calls
@@ -135,13 +166,8 @@ def per_layer(raw, cores):
         d["failed"] = sum(1 for o in raw["ops"] if o["entry"] == e and o["status"] != "ok")
         d["dominant"] = max(("build", "plan", "exec"), key=lambda ph: d[f"{ph}_s"])
         entries[e] = d
-    overhead = {}
-    for name, traced, untraced in (
-            ("pass_s", median(t_pass), median(u_pass)),
-            ("query_p50_s", median([o["total_s"] for o in t_ops]),
-             median([o["total_s"] for o in u_ops]))):
-        overhead[name] = {"traced": traced, "untraced": untraced, "ratio": traced / untraced}
     m["trace.coverage"] = median([d["coverage"] for d in entries.values()])
+    m["trace.uncovered_entries"] = sum(1 for d in entries.values() if not d["coverage_ok"])
     m["trace.overhead_pass"] = overhead["pass_s"]["ratio"]
     m["trace.overhead_p50"] = overhead["query_p50_s"]["ratio"]
     return m, entries, overhead

@@ -29,14 +29,14 @@ def op(entry, status="ok", traced=False, p=0, total=1.0):
 
 
 def raw_run():
-    """A small synthetic raw.json: two entries, two untraced passes, one
-    traced pass and two set-ups."""
+    """A small synthetic raw.json: two entries, two untraced passes and
+    one traced pass."""
     ops = [op("a", p=0, total=1.0), op("b", p=0, total=3.0),
            op("a", p=1, total=2.0), op("b", "wrong_result", p=1, total=4.0),
            op("a", traced=True, p=2, total=1.5), op("b", traced=True, p=2, total=3.5)]
     span = {"jobs": 2, "stages": 3, "tasks": 8, "task_ms": 400, "shuffle_read_b": 10**6,
             "shuffle_write_b": 10**6, "spill_b": 0, "result_b": 5000, "output_b": 0, "output_rows": 10}
-    setup = {"total_s": 10.0, "session_s": 1.0, "cached_mb": 2.5,
+    setup = {"total_s": 10.0, "session_s": 1.0, "jit_s": 6.0, "cached_mb": 2.5,
              "hooks": {"warmFixtures": {"s": 4.0, "mb": 2.5}},
              "first_call_s": {"a": 1.0, "b": 2.0}}
     return {
@@ -44,7 +44,7 @@ def raw_run():
         "passes": [{"traced": False, "s": 4.0, "jit_s": 2.0, "gc_s": 0.1},
                    {"traced": False, "s": 6.0, "jit_s": 2.0, "gc_s": 0.1},
                    {"traced": True, "s": 5.0, "jit_s": 1.5, "gc_s": 0.2}],
-        "setup": [dict(setup, total_s=20.0), setup],
+        "setup": setup,
         "trace": {"wall_s": 5.0, "labels": {"a/exec": span, "b/build": span},
                   "stream": {"batch_ms": [100, 300], "rows_in": 80}},
     }
@@ -69,7 +69,8 @@ class EndToEndTest(unittest.TestCase):
         self.assertEqual(m["ok_rate"], (5 / 6, "ratio"))
         self.assertEqual(m["query_p50_s"][0], 2.5)
         self.assertEqual(m["pass_s"][0], 5.0)
-        self.assertEqual(m["setup_s"][0], 15.0)
+        self.assertEqual(m["setup_s"][0], 10.0)
+        self.assertEqual(m["cached_mb"][0], 2.5)
 
     def test_oracle_failure_fails_every_op_of_the_entry(self):
         _, counts = stats.end_to_end(raw_run(), failed_entries={"a"})
@@ -98,11 +99,41 @@ class PerLayerTest(unittest.TestCase):
         self.assertEqual(m["stream.batch_p50_ms"], 200)
         self.assertEqual(m["stream.output_per_input"], 0.25)
         self.assertEqual(overhead["pass_s"], {"traced": 5.0, "untraced": 5.0, "ratio": 1.0})
-        self.assertEqual(m["setup.cold_s"], 20.0)
+        self.assertEqual(m["setup.jit_s"], 6.0)
+        self.assertEqual(m["setup.first_call_s"], 3.0)
         self.assertEqual(m["jvm.jit_s"], 1.5)
         self.assertEqual(m["artifacts.warmFixtures_mb"], 2.5)
         self.assertEqual(entries["b"]["failed"], 1)
         self.assertEqual(entries["a"]["dominant"], "build")
+
+
+class CoverageTest(unittest.TestCase):
+    def test_spread_is_iqr_over_median(self):
+        # quartiles of 1..5 (exclusive method): 1.5 and 4.5
+        self.assertEqual(stats.rel_iqr([5.0, 1.0, 4.0, 2.0, 3.0]), 1.0)
+        self.assertEqual(stats.rel_iqr([2.0]), 0.0)
+
+    def test_band_spans_one_and_the_overhead_widened_by_the_spread(self):
+        self.assertEqual(stats.coverage_band(1.2, 0.1), (0.9, 1.3))
+        self.assertEqual(stats.coverage_band(0.8, 0.0), (0.8, 1.0))
+
+    def test_entries_are_checked_against_the_overhead(self):
+        # a: traced 1.5 over untraced median 1.5; overhead 2.5 / 2.5
+        m, entries, overhead = stats.per_layer(raw_run(), cores=4)
+        self.assertEqual(entries["a"]["coverage"], 1.0)
+        self.assertTrue(entries["a"]["coverage_ok"])
+        self.assertEqual(m["trace.uncovered_entries"], 0)
+
+    def test_an_entry_off_the_overhead_is_counted(self):
+        raw = raw_run()
+        # a: traced 6.0 over untraced median 1.5 = 4.0; overhead 4.75 / 2.5
+        # = 1.9, a's spread 1.0, so its band ends at 2.9
+        raw["ops"][4] = op("a", traced=True, p=2, total=6.0)
+        m, entries, overhead = stats.per_layer(raw, cores=4)
+        self.assertAlmostEqual(entries["a"]["coverage_band"][1], 2.9)
+        self.assertEqual(entries["a"]["coverage"], 4.0)
+        self.assertFalse(entries["a"]["coverage_ok"])
+        self.assertEqual(m["trace.uncovered_entries"], 1)
 
 
 class CanonicalFormTest(unittest.TestCase):
