@@ -1,0 +1,203 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftColumnBridge
+
+/** The one owner of every cached frame in the engine.
+  *
+  * Two kinds of cache exist, and both are registered here per session:
+  *   - stored artifacts ([[stored]]): derived frames that many registry
+  *     entries read (hierarchy MVs, graph edges, dedup components, the
+  *     s13 graph, the IVF-PQ index). Each is built once per
+  *     (session, name, input), cached, forced, and re-rooted at its
+  *     materialized `InMemoryRelation` leaf, so consumers analyze a
+  *     one-node plan instead of the full build lineage. [[memo]] keeps
+  *     non-frame values (dimension objects, counts, fixture dirs) under
+  *     the same key space and lifecycle.
+  *   - pins ([[pin]], [[leaf]]): caches taken inside an operator body
+  *     for a frame read by two or more consumers. They are BOUNDED per
+  *     session ([[MaxPins]], oldest released first), so a long-lived
+  *     session cannot grow storage without limit; a released pin's
+  *     consumers simply recompute.
+  *
+  * [[releaseAll]] (behind `Graft.releasePins`) unpersists everything a
+  * session cached and forgets its memo entries, so the next read
+  * rebuilds and registers the artifact again. A leaf handed out before
+  * a release still reads correctly, but its `InMemoryRelation`
+  * re-materializes outside the registry: take artifacts from the
+  * registry again after a release rather than reusing old frames.
+  *
+  * Sessions whose context stopped are swept on access (their blocks
+  * died with the context). At most `MaxSessions` (16) sessions are
+  * tracked: sessions sharing a live context (`newSession`) cannot be
+  * swept, so past the bound the oldest is released outright.
+  *
+  * Concurrency: each session's state sits in one `Store`, guarded by
+  * its own lock. Builds run outside the lock; a registration that finds
+  * its store released (`dead`) retries into a fresh one, so a cached
+  * frame never ends up registered nowhere. Two racing builds of one key
+  * both finish; the loser's cache is freed and the winner's value is
+  * returned to both.
+  */
+object Artifacts {
+  val MaxPins = 256
+  private[graft] val MaxSessions = 16
+
+  /** One cache: `df` is the frame cached, `leaf` its re-rooted frame
+    * (null for a plain pin). */
+  private final class Handle(val df: DataFrame) {
+    df.cache()
+    private val buffers = GraftColumnBridge.cacheBuffers(df)
+    @volatile var leaf: DataFrame = null
+
+    def free(): Unit =
+      try { df.unpersist(); buffers.foreach(_.clearCache()) }
+      catch { case scala.util.control.NonFatal(_) => () }
+  }
+
+  private final class Store {
+    var dead = false
+    val pins = new java.util.ArrayDeque[Handle]()
+    val memo = new java.util.HashMap[(String, Any), (Any, Option[Handle])]()
+  }
+
+  private val stores =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, Store]()
+  // store creation order, for the session bound
+  private val order =
+    new java.util.concurrent.ConcurrentLinkedQueue[SparkSession]()
+
+  private def storeOf(spark: SparkSession): Store = {
+    stores.keySet.removeIf(_.sparkContext.isStopped)
+    order.removeIf(_.sparkContext.isStopped)
+    var full = !stores.containsKey(spark)
+    while (full && stores.size >= MaxSessions) {
+      val oldest = order.poll()
+      if (oldest == null) full = false
+      else if (oldest ne spark) releaseAll(oldest) // else a stale entry
+    }
+    stores.computeIfAbsent(spark, _ => { order.add(spark); new Store })
+  }
+
+  /** cache() + force + re-root at the `InMemoryRelation` leaf. The
+    * leaf keeps columnar storage AND the accurate post-materialization
+    * size statistics, so broadcast decisions are unchanged. */
+  private def materialize(df: DataFrame): Handle = {
+    val h = new Handle(df)
+    try {
+      df.count()
+      h.leaf = GraftColumnBridge.cachedLeaf(df)
+    } catch { case e: Throwable => h.free(); throw e }
+    h
+  }
+
+  private def register(h: Handle): Unit = {
+    var done = false
+    while (!done) {
+      val st = storeOf(h.df.sparkSession)
+      done = st.synchronized {
+        if (st.dead) false
+        else {
+          st.pins.addLast(h)
+          // CacheManager unpersists by PLAN equality: an evicted pin
+          // sharing its plan with a newer one drops the shared entry,
+          // the conservative (storage-bounding) direction
+          while (st.pins.size > MaxPins) st.pins.pollFirst().free()
+          true
+        }
+      }
+    }
+  }
+
+  private def remember(spark: SparkSession, key: (String, Any))(
+      build: => (Any, Option[Handle])): Any = {
+    var out: Option[Any] = None
+    while (out.isEmpty) {
+      val st = storeOf(spark)
+      val hit = st.synchronized(if (st.dead) null else st.memo.get(key))
+      if (hit != null) out = Some(hit._1)
+      else {
+        val built = build
+        val kept = st.synchronized {
+          if (st.dead) null
+          else {
+            val cur = st.memo.putIfAbsent(key, built)
+            if (cur == null) built else cur
+          }
+        }
+        // a racing build won, or the store was released mid-build
+        // (then retry into a fresh store): free this build's cache
+        if (kept ne built) built._2.foreach(_.free())
+        if (kept != null) out = Some(kept._1)
+      }
+    }
+    out.get
+  }
+
+  /** The value of `build`, computed once per (session, name, input). */
+  def memo[V](spark: SparkSession, name: String, input: Any)(build: => V): V =
+    remember(spark, (name, input))((build, None)).asInstanceOf[V]
+
+  /** The stored artifact `build`, computed once per (session, name,
+    * input) and served as its materialized leaf. */
+  def stored(spark: SparkSession, name: String, input: Any)(
+      build: => DataFrame): DataFrame =
+    remember(spark, (name, input)) {
+      val h = materialize(build)
+      (h.leaf, Some(h))
+    }.asInstanceOf[DataFrame]
+
+  /** cache() + register as a pin, returning the same frame. */
+  def pin(df: DataFrame): DataFrame = {
+    register(new Handle(df))
+    df
+  }
+
+  /** A pinned frame materialized and re-rooted at its leaf — for a
+    * per-run artifact read many times (a stream's static index); free
+    * it with [[release]] when the run ends. */
+  def leaf(df: DataFrame): DataFrame = {
+    val h = materialize(df)
+    register(h)
+    h.leaf
+  }
+
+  /** Release one pin now, by the frame [[pin]] or [[leaf]] returned.
+    * The frame stays usable; it recomputes. */
+  def release(df: DataFrame): Unit = {
+    val st = stores.get(df.sparkSession)
+    val h = if (st == null) null else st.synchronized {
+      var found: Handle = null
+      val it = st.pins.iterator
+      while (found == null && it.hasNext) {
+        val c = it.next()
+        if ((c.df eq df) || (c.leaf eq df)) { it.remove(); found = c }
+      }
+      found
+    }
+    if (h != null) h.free()
+  }
+
+  /** Unpersist every pin and stored artifact of `spark` and forget its
+    * memo entries. Idempotent; frames already handed out stay usable
+    * (they recompute), and a later read rebuilds the artifact. Safe to
+    * race with builds and pins: each lands here or in a fresh store. */
+  def releaseAll(spark: SparkSession): Unit = {
+    val st = stores.remove(spark)
+    order.remove(spark)
+    if (st != null) st.synchronized {
+      st.dead = true
+      if (!spark.sparkContext.isStopped) {
+        st.pins.forEach(_.free())
+        st.memo.values.forEach(_._2.foreach(_.free()))
+      }
+      st.pins.clear()
+      st.memo.clear()
+    }
+  }
+
+  private[graft] def pinCount(spark: SparkSession): Int = {
+    val st = stores.get(spark)
+    if (st == null) 0 else st.synchronized(st.pins.size)
+  }
+}

@@ -69,12 +69,14 @@ object Graft {
       measures: Seq[operators.MvMeasure]): DataFrame =
     operators.MvFold.read(mv, keys, measures)
 
-  /** Release every operator-internal cache pin taken in `spark` —
-    * the service-lifecycle hook for long-lived sessions (see
-    * [[SessionPins]]; pinned frames stay usable, they recompute).
+  /** Release every cache the engine holds for `spark` — operator pins
+    * and stored artifacts — and forget its memoized artifacts, so the
+    * next read rebuilds them. The service-lifecycle hook for long-lived
+    * sessions (see [[Artifacts]]; frames already handed out stay usable,
+    * they recompute).
     */
   def releasePins(spark: SparkSession): Unit =
-    SessionPins.releaseAll(spark)
+    Artifacts.releaseAll(spark)
 
   /** Persist derived dims as parquet (the reference materializes its
     * dims as stored tables, hierarchy_dimension_table.py:75-82);

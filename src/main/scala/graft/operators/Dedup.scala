@@ -235,7 +235,7 @@ object Dedup {
       .withColumn("sig", polyMinhashSig(col("shingles"), k))
       .withColumn("bandkeys", polyBandKeys(col("sig"), bands, rows))
       .select("doc_id", "sig", "bandkeys")
-      .transform(graft.SessionPins.pin)
+      .transform(graft.Artifacts.pin)
     val buckets = sigs.select(col("doc_id"),
       posexplode(col("bandkeys")).as(Seq("band", "bucket")))
     // candidate pairs: same (band, bucket), a < b, deduped across bands
@@ -286,7 +286,7 @@ object Dedup {
       .withColumn("sig", polyMinhashSig(col("shingles"), k))
       .withColumn("bandkeys", polyBandKeys(col("sig"), bands, rows))
       .select("doc_id", "sig", "bandkeys")
-      .transform(graft.SessionPins.pin)
+      .transform(graft.Artifacts.pin)
     val buckets = sigs.select(col("doc_id"), col("sig"),
       posexplode(col("bandkeys")).as(Seq("band", "bucket")))
     buckets.as("a")
@@ -321,11 +321,11 @@ object Dedup {
     * Note the internal signature frame is pinned for the bucket
     * self-join (both sides read it; an uncached plan re-hashes the
     * corpus twice and projection collapse re-inlines the pipeline).
-    * The pin is OWNED by [[graft.SessionPins]] (r17 verdict #4):
+    * The pin is OWNED by [[graft.Artifacts]] (r17 verdict #4):
     * CacheManager still dedupes repeat invocations on the same input
     * plan, distinct inputs register per session against a bounded
     * registry (oldest pin unpersisted past the bound), and services
-    * release everything with `SessionPins.releaseAll(spark)` — the
+    * release everything with `Graft.releasePins(spark)` — the
     * grow-forever footgun of the old raw `cache()` convention is
     * retired structurally.
     */
@@ -340,7 +340,7 @@ object Dedup {
       .withColumn("sig", polyMinhashSig(col("shingles"), k))
       .withColumn("bandkeys", polyBandKeys(col("sig"), bands, rows))
       .select("doc_id", "lang", "n_chars", "sig", "bandkeys")
-      .transform(graft.SessionPins.pin)
+      .transform(graft.Artifacts.pin)
     val buckets = sigs.select(col("doc_id"), col("lang"), col("n_chars"),
       col("sig"), posexplode(col("bandkeys")).as(Seq("band", "bucket")))
     buckets.as("a")
@@ -379,7 +379,7 @@ object Dedup {
       .withColumn("sim", polySimhash32(col("toks")))
       .select(Seq(col("doc_id"), col("sim")) ++
         (0 until 4).map(k => shiftright(col("sim"), 15 * k).bitwiseAND(lit(32767L)).as(s"sb_$k")): _*)
-      .transform(graft.SessionPins.pin)
+      .transform(graft.Artifacts.pin)
     val buckets = sigs.select(col("doc_id"), col("sim"),
         posexplode(array((0 until 4).map(k => col(s"sb_$k")): _*)).as(Seq("band", "bucket")))
     val near = buckets.as("a")
@@ -436,7 +436,7 @@ object Dedup {
       .withColumn("shingles", array_distinct(wordNgrams(tokens(lower(col("text"))), 2)))
       .withColumn("band", floor(col("n_chars") / bandWidth))
       .select("doc_id", "lang", "n_chars", "band", "shingles")
-      .transform(graft.SessionPins.pin)
+      .transform(graft.Artifacts.pin)
     val oversized = t.groupBy("lang", "band")
       .agg(count(lit(1)).as("n"))
       .filter(col("n") > maxBandPopulation)
@@ -489,7 +489,7 @@ object Dedup {
         array_distinct(wordNgrams(tokens(lower(col("text"))), 5)))
       .select("doc_id", "grams")
       .filter(size(col("grams")) > 0)
-      .transform(graft.SessionPins.pin)
+      .transform(graft.Artifacts.pin)
     val ex = t.select(col("doc_id"), explode(col("grams")).as("gram"))
     val kept = ex.groupBy("gram").agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= maxDf)
@@ -1088,7 +1088,7 @@ object Dedup {
         .select(col("vec_a"), col("vec_b"), round(col("cos"), 6).as("cosine"))
     }
     val buckets =
-      lshBucketed(graft.SessionPins.pin(e), nPlanes, nTables, extras = Seq("label"))
+      lshBucketed(graft.Artifacts.pin(e), nPlanes, nTables, extras = Seq("label"))
     buckets.as("a").join(buckets.as("b"),
         col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
         col("a.vec_id") < col("b.vec_id"))

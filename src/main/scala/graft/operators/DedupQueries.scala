@@ -20,40 +20,32 @@ object DedupQueries {
   /** Memoized exact-Jaccard components per (session, sfDir, threshold):
     * d6 and d10 run the same component pipeline (shingle → block →
     * verify → CC) in one registry pass, so the second consumer reads
-    * the cached frame instead of recomputing the whole loop — the same
-    * contract as [[HierarchyQueries]]'s dim cache. Dead sessions are
-    * swept on access (see [[graft.SessionCache]]).
+    * the stored frame instead of recomputing the whole loop — the same
+    * contract as [[HierarchyQueries]]'s dims ([[graft.Artifacts]]).
     */
-  private val compCache =
-    new graft.SessionCache[(String, Double), DataFrame](graft.Materialize.release)
-
   private def cachedClusters(s: SparkSession, sfDir: String,
       minJaccard: Double): DataFrame =
-    compCache(s, (sfDir, minJaccard))(graft.Materialize.leaf(
-      Dedup.jaccardClusters(Tables.documents(s, sfDir), minJaccard = minJaccard)))
+    graft.Artifacts.stored(s, "dedup.clusters", (sfDir, minJaccard))(
+      Dedup.jaccardClusters(Tables.documents(s, sfDir), minJaccard = minJaccard))
 
   /** Memoized LSH-candidate and exact-Jaccard pair frames per
     * (session, sfDir): d22 and d25 evaluate the SAME candidate set and
     * truth pairs in one registry pass, so the second consumer reads
-    * the session cache instead of re-running both pair generators —
+    * the stored frames instead of re-running both pair generators —
     * cachedClusters' contract applied to the eval harness inputs.
     */
-  private val evalPairCache =
-    new graft.SessionCache[(String, String), DataFrame](graft.Materialize.release)
-
   private def cachedEvalCand(s: SparkSession, d: String): DataFrame =
-    evalPairCache(s, (d, "cand")) {
+    graft.Artifacts.stored(s, "dedup.evalCand", d) {
       val k = 32
-      graft.Materialize.leaf(
-        Dedup.minhashPairsBlocked(Tables.documents(s, d), k = k,
-            bands = Dedup.lshBandsFor(0.05, k))
-          .select("doc_a", "doc_b"))
+      Dedup.minhashPairsBlocked(Tables.documents(s, d), k = k,
+          bands = Dedup.lshBandsFor(0.05, k))
+        .select("doc_a", "doc_b")
     }
 
   private def cachedEvalTruth(s: SparkSession, d: String): DataFrame =
-    evalPairCache(s, (d, "truth"))(
-      graft.Materialize.leaf(Dedup.ngramJaccard(Tables.documents(s, d))
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))))
+    graft.Artifacts.stored(s, "dedup.evalTruth", d)(
+      Dedup.ngramJaccard(Tables.documents(s, d))
+        .select(col("doc_a"), col("doc_b"), col("jaccard")))
 
   /** Force the shared exact-Jaccard component derivation and the
     * d22/d25 eval pair frames at `sfDir` so timed runs read the

@@ -65,21 +65,6 @@ class HierarchyDimension(
 
   private val depthBound: Int = if (knownDepth > 0) knownDepth else maxDepth
 
-  // every .cache()'d internal frame, so SessionCache eviction can
-  // release the block-manager storage, not just the driver reference
-  private val pinned = new scala.collection.mutable.ArrayBuffer[DataFrame]()
-  private def pin(df: DataFrame): DataFrame = synchronized { pinned += df; df }
-
-  /** Unpersist every cached internal frame. Safe to call on a live
-    * session whose dim was evicted — the lazy vals stay usable, they
-    * just recompute instead of reading cached blocks.
-    */
-  def unpersistAll(): Unit = synchronized {
-    pinned.foreach(df =>
-      try df.unpersist() catch { case scala.util.control.NonFatal(_) => () })
-    pinned.clear()
-  }
-
   /** The DFS sort order can fuse into the single-task leveling pass
     * only when every level field renders to JSON bit-identically to
     * Spark's `to_json` under this class's own renderer — true for the
@@ -324,9 +309,8 @@ class HierarchyDimension(
         new GenericInternalRow(out): InternalRow
       }
     }
-    pin(org.apache.spark.sql.GraftColumnBridge
-      .dataFrameFromInternalRows(spark, outSchema, rdd)
-      .cache())
+    graft.Artifacts.pin(org.apache.spark.sql.GraftColumnBridge
+      .dataFrameFromInternalRows(spark, outSchema, rdd))
   }
 
   /** Distributed leveling for hierarchies ABOVE `maxNodes`: the same
@@ -418,7 +402,7 @@ class HierarchyDimension(
       .withColumn("node_sort_order", lit(null).cast(LongType))
     val outCols = (inSchema.fieldNames.toSeq ++
       Seq("is_root", "is_leaf", "level_number", "path", "node_sort_order")).map(col)
-    pin(ranked.unionByName(dropped).select(outCols: _*).cache())
+    graft.Artifacts.pin(ranked.unionByName(dropped).select(outCols: _*))
   }
 
   /** Nodes + `is_root` / `is_leaf` flags
@@ -453,11 +437,10 @@ class HierarchyDimension(
     } else {
       val pathKey = array_join(
         expr("transform(path, x -> to_json(x, map('ignoreNullFields','false')))"), "/")
-      pin(enriched
+      graft.Artifacts.pin(enriched
         .filter(col("path").isNotNull)
         .withColumn("node_sort_order",
-          row_number().over(Window.orderBy(pathKey)).cast("long"))
-        .cache())
+          row_number().over(Window.orderBy(pathKey)).cast("long")))
     }
 
   /** Reporting dimension: `level_number`, DFS `node_sort_order`, the

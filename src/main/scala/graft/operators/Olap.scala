@@ -249,7 +249,7 @@ object Olap {
     // pass, survivor filter, sweep join) — persist once, q46's
     // inline-cache convention, or the upstream fact aggregate re-runs
     // per consumer
-    val pts = graft.SessionPins.pin(
+    val pts = graft.Artifacts.pin(
       points.select(col(idCol), col(xCol).cast("double").as("__x"),
         col(yCol).as("__y")))
     val stats = pts.agg(min("__x").as("__xmin"), max("__x").as("__xmax"))
@@ -380,23 +380,29 @@ object Olap {
     * cumulative revenue share — A ≤ `aCut`, B ≤ `bCut`, C the rest —
     * and summarized per class. The cumulative fold runs through
     * [[rangedGlobal]] (r22): entity-grain, but no longer single-task.
-    * Callers must feed order-free-deterministic revenues (integer-cent
-    * sums) so the fold sees identical values on any engine.
+    * Every sum runs over `revCol` cast to DECIMAL(38,6): a double sum
+    * adds in shuffle-arrival order, so the share's low bits (and a
+    * class at the cut) could change between runs. Scale 6 loses no
+    * digit under Spark's decimal sum/add precision rules; the share
+    * division and the outputs go back to double.
     */
   def abcSummary(byEntity: DataFrame, idCol: String, revCol: String,
       aCut: Double = 0.80, bCut: Double = 0.95): DataFrame = {
-    val (ranked, c) = rangedGlobal(byEntity,
-      Seq(col(revCol).desc, col(idCol)), Some(col(revCol)))
-    val totAll = c.agg(sum(revCol).as("__totsh"))
+    val exact = byEntity.withColumn("__rev", col(revCol).cast("decimal(38,6)"))
+    val (ranked, c) = rangedGlobal(exact,
+      Seq(col(revCol).desc, col(idCol)), Some(col("__rev")))
+    val totAll = c.agg(sum("__rev").as("__totsh"))
     val classed = ranked
       .crossJoin(broadcast(totAll))
-      .withColumn("__share", round(col("__cum") / col("__totsh"), 9))
+      .withColumn("__share", round(
+        col("__cum").cast("double") / col("__totsh").cast("double"), 9))
       .withColumn("abc_class",
         when(col("__share") <= aCut, lit("A"))
           .when(col("__share") <= bCut, lit("B")).otherwise(lit("C")))
-    val tot = classed.agg(round(sum(revCol), 2).as("__tot"))
+    def revenue = round(sum("__rev"), 2).cast("double")
+    val tot = classed.agg(revenue.as("__tot"))
     classed.groupBy("abc_class")
-      .agg(count(lit(1)).as("n_parts"), round(sum(revCol), 2).as("revenue"))
+      .agg(count(lit(1)).as("n_parts"), revenue.as("revenue"))
       .crossJoin(broadcast(tot))
       .select(col("abc_class"), col("n_parts"), col("revenue"),
         round(col("revenue") / col("__tot"), 6).as("pct"))

@@ -952,7 +952,7 @@ object OlapQueries {
           col("p_brand"))), Seq("l_partkey"))
         .groupBy("l_orderkey")
         .agg(sort_array(collect_set(col("p_brand"))).as("bs"))
-        .transform(graft.SessionPins.pin)
+        .transform(graft.Artifacts.pin)
       val nOrders = baskets.agg(count(lit(1)).as("n_orders"))
       val brandCnt = baskets
         .select(explode(col("bs")).as("p_brand"))

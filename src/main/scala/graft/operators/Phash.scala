@@ -293,7 +293,7 @@ object Phash {
       .withColumn("band_val",
         expr("shiftrightunsigned(phash, band_idx * 16)")
           .bitwiseAND(lit(0xFFFFL)))
-      .transform(graft.SessionPins.pin)
+      .transform(graft.Artifacts.pin)
     val a = bands.select(col("band_idx"), col("band_val"),
       col("doc_id").as("doc_a"), col("phash").as("ph_a"))
     val b = bands.select(col("band_idx"), col("band_val"),

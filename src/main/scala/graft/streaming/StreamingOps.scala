@@ -576,10 +576,9 @@ object StreamingOpsSinks {
     // (r21): foreachBatch re-plans the join per micro-batch, so a
     // bare cache still re-analyzed the index's full build lineage
     // once per batch
-    // rawIndex is unpersisted at stream close so every run rebuilds
-    // its index (the leaf's own unpersist is a no-op by design)
-    val rawIndex = graft.operators.Dedup.prepNearDupIndex(corpus)
-    val index = graft.Materialize.leaf(rawIndex)
+    // released at stream close so every run rebuilds its index
+    val index = graft.Artifacts.leaf(
+      graft.operators.Dedup.prepNearDupIndex(corpus))
     val q = stream.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
@@ -596,7 +595,7 @@ object StreamingOpsSinks {
           ()
       }
       .start()
-    try q.processAllAvailable() finally { q.stop(); rawIndex.unpersist() }
+    try q.processAllAvailable() finally { q.stop(); graft.Artifacts.release(index) }
   }
 
   /** EXACTLY-ONCE continuous SEMANTIC-dedup ingest — st11's durable
@@ -945,26 +944,32 @@ object StreamingOpsSinks {
     // any other IOException (transient FS failure) propagates as
     // itself instead of masquerading as a lock conflict.
     val lock = new org.apache.hadoop.fs.Path(out, ".graft-compact-lock")
-    def lockConflict(): Nothing = throw new IllegalStateException(
-      s"MV store $outDir is locked by another compaction ($lock exists). " +
-        "If no compactor is alive this is a stale lock from a crashed " +
-        "run — the store is consistent (recovery is the manifest swap, " +
-        "not the lock); delete the lock file and re-run.")
+    def lockConflict(ownFailure: Option[java.io.IOException]): Nothing =
+      throw new IllegalStateException(
+        s"MV store $outDir is locked by another compaction ($lock exists). " +
+          "If no compactor is alive this is a stale lock from a crashed " +
+          "run — the store is consistent (recovery is the manifest swap, " +
+          "not the lock); delete the lock file and re-run." +
+          ownFailure.fold("")(e => " The lock may also belong to this " +
+            s"failed attempt: creating it raised $e after the file appeared."),
+        ownFailure.orNull)
     val lockStream =
       try fs.create(lock, false)
       catch {
         case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-             _: java.nio.file.FileAlreadyExistsException => lockConflict()
+             _: java.nio.file.FileAlreadyExistsException => lockConflict(None)
         // older Hadoop impls / some connectors signal the conflict as a
         // plain IOException (ADVICE r21 #4): if the lock demonstrably
         // exists, it IS the conflict — keep the recovery guidance;
         // genuinely transient failures still propagate as themselves
         case e: java.io.IOException =>
           val exists = try fs.exists(lock) catch { case _: Throwable => false }
-          if (exists) lockConflict() else throw e
+          if (exists) lockConflict(Some(e)) else throw e
       }
-    lockStream.close()
     try {
+      // inside the try: a failing close must still delete the lock,
+      // or it would block every later compaction
+      lockStream.close()
       finishPendingSwap(fs, out) // complete a crashed predecessor first
       val store = spark.read.parquet(outDir)
       MvFold.checkMvSchema(store.columns.toSeq.filterNot(_ == "batch_id"),
@@ -1083,11 +1088,12 @@ object StreamingOpsSinks {
 
 object StreamingQueries {
 
-  /** st9/st10 SOURCE FIXTURES: the multi-file "arriving batches"
+  /* st9/st10 SOURCE FIXTURES: the multi-file "arriving batches"
     * directories the file streams consume. Written once per (session,
-    * sfDir) — the fixture is demo setup standing in for files landing
-    * from outside, not part of the streamed operator, so timed runs
-    * measure stream consumption, not the fixture write.
+    * sfDir) and memoized in graft.Artifacts — the fixture is demo setup
+    * standing in for files landing from outside, not part of the
+    * streamed operator, so timed runs measure stream consumption, not
+    * the fixture write.
     *
     * TWO files per fixture (r22; was 4): micro-batching is
     * semantics-free for every consumer (per-doc decisions against a
@@ -1102,7 +1108,6 @@ object StreamingQueries {
     * arrival rates trigger sizing is exactly this knob (guide §1.2:
     * remove unnecessary passes).
     */
-  private val fixtureCache = new graft.SessionCache[String, String]
 
   /** Per-run scratch root for STREAMING CHECKPOINTS (offset WAL,
     * commit log, state store). These are run-local throwaways here —
@@ -1151,7 +1156,7 @@ object StreamingQueries {
   }
 
   private def mvStreamDir(s: SparkSession, d: String): String =
-    fixtureCache(s, s"mv:$d") {
+    graft.Artifacts.memo(s, "stream.mv", d) {
       val dir = java.nio.file.Files.createTempDirectory("graft_mv_stream")
         .resolve("facts").toString
       // prune to the MV's columns before the temp write: the stream
@@ -1169,7 +1174,7 @@ object StreamingQueries {
     * receives when upstream restates data.
     */
   private def mvRetractStreamDir(s: SparkSession, d: String): String =
-    fixtureCache(s, s"mvr:$d") {
+    graft.Artifacts.memo(s, "stream.mvr", d) {
       val dir = java.nio.file.Files.createTempDirectory("graft_mvr_stream")
         .resolve("facts").toString
       val facts = graft.operators.HierarchyAgg.salesFacts(s, d)
@@ -1186,7 +1191,7 @@ object StreamingQueries {
     }
 
   private def ndStreamDir(s: SparkSession, d: String): String =
-    fixtureCache(s, s"nd:$d") {
+    graft.Artifacts.memo(s, "stream.nd", d) {
       val dir = java.nio.file.Files.createTempDirectory("graft_nd_stream")
         .resolve("batch").toString
       Tables.documents(s, d).filter(pmod(col("doc_id"), lit(5)) === 0)
@@ -1199,7 +1204,7 @@ object StreamingQueries {
     * eval gram index.
     */
   private def decontamStreamDir(s: SparkSession, d: String): String =
-    fixtureCache(s, s"decontam:$d") {
+    graft.Artifacts.memo(s, "stream.decontam", d) {
       val dir = java.nio.file.Files.createTempDirectory("graft_dc_stream")
         .resolve("batch").toString
       Tables.documents(s, d).filter(pmod(col("doc_id"), lit(50)) =!= 0)
@@ -1208,7 +1213,7 @@ object StreamingQueries {
     }
 
   private def embStreamDir(s: SparkSession, d: String): String =
-    fixtureCache(s, s"emb:$d") {
+    graft.Artifacts.memo(s, "stream.emb", d) {
       val dir = java.nio.file.Files.createTempDirectory("graft_emb_stream")
         .resolve("batch").toString
       Tables.embeddings(s, d).filter(pmod(col("vec_id"), lit(5)) === 0)
@@ -1221,7 +1226,7 @@ object StreamingQueries {
     * routes each arriving micro-batch through the permissive decode.
     */
   private def quarantineStreamDir(s: SparkSession, d: String): String =
-    fixtureCache(s, s"quarantine:$d") {
+    graft.Artifacts.memo(s, "stream.quarantine", d) {
       val dir = java.nio.file.Files.createTempDirectory("graft_q_stream")
         .resolve("batch").toString
       import s.implicits._
@@ -1248,7 +1253,7 @@ object StreamingQueries {
     * corpus.
     */
   private def tilesStreamDir(s: SparkSession, d: String): String =
-    fixtureCache(s, s"tiles:$d") {
+    graft.Artifacts.memo(s, "stream.tiles", d) {
       val dir = java.nio.file.Files.createTempDirectory("graft_tile_stream")
         .resolve("batch").toString
       import s.implicits._
@@ -1271,7 +1276,7 @@ object StreamingQueries {
     * MvFold store.
     */
   private def ordersMvStreamDir(s: SparkSession, d: String): String =
-    fixtureCache(s, s"ordmv:$d") {
+    graft.Artifacts.memo(s, "stream.ordmv", d) {
       val dir = java.nio.file.Files.createTempDirectory("graft_ordmv_stream")
         .resolve("facts").toString
       Tables.orders(s, d).select(
@@ -1288,7 +1293,7 @@ object StreamingQueries {
     * slice — the correction feed on the quantile-MV plane.
     */
   private def ordersRetractStreamDir(s: SparkSession, d: String): String =
-    fixtureCache(s, s"ordmvr:$d") {
+    graft.Artifacts.memo(s, "stream.ordmvr", d) {
       val dir = java.nio.file.Files.createTempDirectory("graft_ordrt_stream")
         .resolve("facts").toString
       val ord = Tables.orders(s, d)
@@ -1308,7 +1313,7 @@ object StreamingQueries {
     * incrementally.
     */
   private def docsStreamDir(s: SparkSession, d: String): String =
-    fixtureCache(s, s"docsfull:$d") {
+    graft.Artifacts.memo(s, "stream.docsfull", d) {
       val dir = java.nio.file.Files.createTempDirectory("graft_docs_stream")
         .resolve("batch").toString
       Tables.documents(s, d)
@@ -1833,8 +1838,8 @@ object StreamingQueries {
       s.conf.set("spark.sql.shuffle.partitions", "8")
       // corpus index built once for the stream (the persisted-index
       // contract); per batch only the arriving docs shingle
-      val rawIndex = graft.operators.Dedup.prepNearDupIndex(corpus)
-      val index = graft.Materialize.leaf(rawIndex)
+      val index = graft.Artifacts.leaf(
+        graft.operators.Dedup.prepNearDupIndex(corpus))
       try {
         drainWithScratchCkpt(stream.writeStream.outputMode("update")
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -1846,7 +1851,7 @@ object StreamingQueries {
           })
       } finally {
         s.conf.set("spark.sql.shuffle.partitions", partsWas)
-        rawIndex.unpersist()
+        graft.Artifacts.release(index)
       }
       acc
     }),
@@ -1868,8 +1873,7 @@ object StreamingQueries {
       var acc: DataFrame = null
       val partsWas = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", "8")
-      val rawIndex = graft.operators.Dedup.evalGramIndex(eval)
-      val index = graft.Materialize.leaf(rawIndex)
+      val index = graft.Artifacts.leaf(graft.operators.Dedup.evalGramIndex(eval))
       try {
         drainWithScratchCkpt(stream.writeStream.outputMode("update")
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -1881,7 +1885,7 @@ object StreamingQueries {
           })
       } finally {
         s.conf.set("spark.sql.shuffle.partitions", partsWas)
-        rawIndex.unpersist()
+        graft.Artifacts.release(index)
       }
       if (acc == null)
         graft.operators.Dedup.decontaminate(docs.limit(0), eval)
@@ -1907,9 +1911,8 @@ object StreamingQueries {
       s.conf.set("spark.sql.shuffle.partitions", "8")
       val catalogTiles = graft.operators.Multimodal
         .imageTiles(s, s.read.parquet(dir), patch = 4).toDF()
-      val rawIndex = graft.operators.Multimodal
-        .subimageIndex(catalogTiles)
-      val index = graft.Materialize.leaf(rawIndex)
+      val index = graft.Artifacts.leaf(
+        graft.operators.Multimodal.subimageIndex(catalogTiles))
       try {
         drainWithScratchCkpt(stream.writeStream.outputMode("update")
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -1923,7 +1926,7 @@ object StreamingQueries {
           })
       } finally {
         s.conf.set("spark.sql.shuffle.partitions", partsWas)
-        rawIndex.unpersist()
+        graft.Artifacts.release(index)
       }
       if (acc == null)
         graft.operators.Multimodal.subimageMatches(catalogTiles.limit(0))
@@ -2034,7 +2037,6 @@ object StreamingQueries {
             hashMv = (if (hashMv == null) MvFold.build(delta, hKeys, hMeasures)
                       else MvFold.fold(hashMv, delta, hKeys, hMeasures))
               .localCheckpoint()
-            delta.unpersist()
             ()
           })
       } finally s.conf.set("spark.sql.shuffle.partitions", partsWas)

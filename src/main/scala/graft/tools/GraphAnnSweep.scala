@@ -36,11 +36,11 @@ object GraphAnnSweep {
     for (degree <- Seq(8, 16, 24);
          beam <- Seq(8, 16);
          entries <- Seq(8, 16)) {
-      val ex = Similarity.exactKnnGraphEdges(emb, degree).cache()
+      val ex = graft.Artifacts.pin(Similarity.exactKnnGraphEdges(emb, degree))
       val r = recall(Similarity.graphSearch(emb, degree = degree,
         beam = beam, nEntries = entries, prebuiltEdges = Some(ex)).collect())
       println(f"exact degree=$degree beam=$beam entries=$entries recall@5=$r%.2f")
-      ex.unpersist()
+      graft.Artifacts.release(ex)
     }
     spark.stop()
   }

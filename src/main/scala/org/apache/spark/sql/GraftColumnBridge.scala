@@ -82,6 +82,16 @@ object GraftColumnBridge {
     }
   }
 
+  /** The buffers behind `df`'s CacheManager entry, if `df` is cached.
+    * The cache's owner keeps them: once `df` is unpersisted the entry
+    * leaves the CacheManager, but a plan still holding its relation (a
+    * [[cachedLeaf]] frame, or a read racing the unpersist) rebuilds
+    * these buffers, and only this handle can clear them again. */
+  def cacheBuffers(df: Dataset[_]): Option[execution.columnar.CachedRDDBuilder] =
+    df.sparkSession.asInstanceOf[classic.SparkSession].sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder)
+
   /** DataFrame over an InternalRow RDD with an explicit schema — the
     * return path for operators that drop to the internal-row level
     * (e.g. the single-task union-find in

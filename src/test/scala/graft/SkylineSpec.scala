@@ -67,6 +67,29 @@ class SkylineSpec extends SparkSpec {
     assert(got === Map("A" -> 2L, "C" -> 1L))
   }
 
+  test("abcSummary: revenues with no exact double sum classify and total as in BigDecimal") {
+    import spark.implicits._
+    // 0.1/0.2/0.3-style revenues: their double sums depend on the
+    // addition order, their decimal sums do not
+    val revs = (1L to 40L).map(i => i -> Seq(0.1, 0.2, 0.3, 0.7, 1.1)(i.toInt % 5))
+    val got = Olap.abcSummary(revs.toDF("id", "rev").repartition(7), "id", "rev")
+      .as[(String, Long, Double, Double)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    val sorted = revs.sortBy { case (id, r) => (-r, id) }.map(t => BigDecimal(t._2))
+    val total = sorted.sum
+    val classes = sorted.scanLeft(BigDecimal(0))(_ + _).tail.zip(sorted).map {
+      case (cum, r) =>
+        val share = (cum / total).setScale(9, BigDecimal.RoundingMode.HALF_UP)
+        (if (share <= BigDecimal("0.80")) "A"
+         else if (share <= BigDecimal("0.95")) "B" else "C") -> r
+    }
+    val want = classes.groupBy(_._1).map { case (k, rs) =>
+      k -> (rs.size.toLong,
+        rs.map(_._2).sum.setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    }
+    assert(got === want)
+  }
+
   test("cdcApply: update applies, delete erases, re-insert revives, untouched keeps") {
     import spark.implicits._
     val base = Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
