@@ -49,16 +49,7 @@ object Bench {
         f"[bench] ======== CONTENDED RUN: start load_avg $startLoad%.2f > " +
           f"$foldMaxLoad%.2f — measuring, but floor fold is DISABLED " +
           "(re-run idle to fold; override with SPARK_GRAFT_FOLD_MAXLOAD) ========")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     // JVM/codegen warmup: run every query once at the smallest SF so
     // measured times reflect steady state (codegen compiled, JIT warm)
     // rather than first-call compilation; best-effort per query (never

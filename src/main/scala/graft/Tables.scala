@@ -1,20 +1,65 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** Loaders for the TPC-H-ish star schema the driver generates.
+/** Loaders for the generated TPC-H-ish star schema, and the
+  * engine's one read path for parquet inputs ([[read]], [[schema]]).
   *
-  * All loads are plain parquet scans so Catalyst's predicate pushdown /
-  * column pruning reach the file format; never cache here — callers
-  * decide lifetime.
+  * Data is never cached here: every read is a plain parquet scan, so
+  * Catalyst's predicate pushdown and column pruning reach the file
+  * format, and callers decide lifetime. Schemas ARE memoized. Spark
+  * infers a parquet schema with a one-task job per read; [[schema]]
+  * infers it once per (session, path, file listing, inference
+  * settings) through [[Artifacts.memo]], and [[read]] hands it to the
+  * reader. The listing is the (name, size, modification time) of each
+  * file directly under the path, so a table rewritten in place is
+  * inferred again, and `Graft.releasePins` forgets every memoized
+  * schema.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  // the session settings that change what parquet inference returns
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema")
+
+  /** (name, size, modification time) of each file under `path`, or of
+    * `path` itself when it is a file; empty when nothing is there (the
+    * inference then fails as an uncached read would). */
+  private def listing(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    import org.apache.hadoop.fs.Path
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(p)).toSeq.flatten
+      .flatMap(st => if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Seq(st))
+      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+      .sorted
+  }
+
+  /** The schema Spark infers for the parquet input at `path`, inferred
+    * once per session and file listing. */
+  def schema(spark: SparkSession, path: String): StructType = {
+    val confs = inferenceConfs.map(spark.conf.getOption)
+    Artifacts.memo(spark, "tables.schema", (path, confs, listing(spark, path))) {
+      spark.read.parquet(path).schema
+    }
+  }
+
+  /** The parquet input at `path`, read with its memoized [[schema]].
+    * Each call builds a fresh relation (new attribute ids, a fresh file
+    * listing), exactly as an inferring read would. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schema(spark, path)).parquet(path)
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    read(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

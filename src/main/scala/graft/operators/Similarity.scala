@@ -1149,9 +1149,9 @@ object Similarity {
     * assignment codebooks. */
   def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, Seq[Seq[Seq[Double]]], DataFrame) = {
-    val index = spark.read.parquet(s"$dir/index")
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val rows = spark.read.parquet(s"$dir/codebooks").collect()
+    val index = graft.Tables.read(spark, s"$dir/index")
+    val centroids = graft.Tables.read(spark, s"$dir/centroids")
+    val rows = graft.Tables.read(spark, s"$dir/codebooks").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq))
     val m = rows.map(_._1).max + 1
     val codebooks = (0 until m).map { j =>

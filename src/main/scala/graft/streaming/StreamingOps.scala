@@ -1348,7 +1348,7 @@ object StreamingQueries {
     java.nio.file.Files.createSymbolicLink(
       dir.resolve("events.parquet"),
       java.nio.file.Paths.get(s"$sfDir/events.parquet"))
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val schema = Tables.schema(spark, s"$sfDir/events.parquet")
     val raw = spark.readStream.schema(schema).parquet(dir.toString)
     // ONE ts normalization for batch and stream: Tables.normalizeTs
     // branches on the physical encoding (nanos-long / NTZ / timestamp),
@@ -1487,7 +1487,7 @@ object StreamingQueries {
       java.nio.file.Files.createSymbolicLink(
         dir.resolve("events.parquet"),
         java.nio.file.Paths.get(s"$d/events.parquet"))
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, s"$d/events.parquet")
       val out = java.nio.file.Files
         .createTempDirectory("graft_hist_sink").resolve("out").toString
       val ckpt = StreamingQueries.ckptScratchDir("graft_hist_ckpt")
@@ -1767,7 +1767,7 @@ object StreamingQueries {
     "st9_incremental_rollup_stream" -> ((s, d) => {
       val adim = graft.operators.HierarchyQueries.dimension(s, d).aggregationDim
       val dir = mvStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schema(s, dir)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       var mv: DataFrame = null
@@ -1797,7 +1797,7 @@ object StreamingQueries {
     "st23_stream_distinct_mv" -> ((s, d) => {
       val adim = graft.operators.HierarchyQueries.dimension(s, d).aggregationDim
       val dir = mvStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schema(s, dir)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       var mv: DataFrame = null
@@ -1830,7 +1830,7 @@ object StreamingQueries {
       val docs = Tables.documents(s, d)
       val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
       val dir = ndStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schema(s, dir)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       var acc: DataFrame = null
@@ -1867,7 +1867,7 @@ object StreamingQueries {
       val docs = Tables.documents(s, d)
       val eval = docs.filter(pmod(col("doc_id"), lit(50)) === 0)
       val dir = decontamStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schema(s, dir)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       var acc: DataFrame = null
@@ -1903,14 +1903,14 @@ object StreamingQueries {
     // runs before a scraped image reaches training storage.
     "st35_stream_subimage" -> ((s, d) => {
       val dir = tilesStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schema(s, dir)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       var acc: DataFrame = null
       val partsWas = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", "8")
       val catalogTiles = graft.operators.Multimodal
-        .imageTiles(s, s.read.parquet(dir), patch = 4).toDF()
+        .imageTiles(s, Tables.read(s, dir), patch = 4).toDF()
       val index = graft.Artifacts.leaf(
         graft.operators.Multimodal.subimageIndex(catalogTiles))
       try {
@@ -1945,7 +1945,7 @@ object StreamingQueries {
     // #1 operational failure.
     "st36_stream_quarantine" -> ((s, d) => {
       val dir = quarantineStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schema(s, dir)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       var acc: DataFrame = null
@@ -1964,7 +1964,7 @@ object StreamingQueries {
       } finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
       if (acc == null)
         graft.operators.Multimodal.extractFeaturesQuarantine(s,
-          s.read.parquet(dir).limit(0),
+          Tables.read(s, dir).limit(0),
           new graft.operators.Multimodal.BmpCodec).toDF()
       else acc
     }),
@@ -1985,7 +1985,7 @@ object StreamingQueries {
       import graft.operators.{MvFold, MvSum, MvCount}
       import graft.functions.TextFunctions._
       val dir = docsStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schema(s, dir)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       def perDoc(df: DataFrame): DataFrame = df
@@ -2070,7 +2070,7 @@ object StreamingQueries {
     "st37_stream_mv_fold" -> ((s, d) => {
       import graft.operators.{MvFold, MvSum, MvCount, MvBitmapDistinct}
       val dir = ordersMvStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schema(s, dir)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       val keys = Seq("o_orderpriority", "order_year")
@@ -2091,7 +2091,7 @@ object StreamingQueries {
           })
       } finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
       if (mv == null)
-        mv = MvFold.build(s.read.parquet(dir).limit(0), keys, measures)
+        mv = MvFold.build(Tables.read(s, dir).limit(0), keys, measures)
       MvFold.read(mv, keys, measures)
         .select(col("o_orderpriority"), col("order_year"),
           round(col("sum_cents").cast("double") / 100.0, 2).as("sum_price"),
@@ -2110,7 +2110,7 @@ object StreamingQueries {
     "st38_stream_mv_sink" -> ((s, d) => {
       import graft.operators.{MvSum, MvCount, MvBitmapDistinct}
       val dir = ordersMvStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schema(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_mvsink").resolve("out").toString
       val ckpt = StreamingQueries.ckptScratchDir("graft_mvsink_ckpt")
@@ -2142,7 +2142,7 @@ object StreamingQueries {
       import graft.operators.{MvSum, MvCount}
       val adim = graft.operators.HierarchyQueries.dimension(s, d).aggregationDim
       val dir = mvStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schema(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_hrmv").resolve("out").toString
       val ckpt = StreamingQueries.ckptScratchDir("graft_hrmv_ckpt")
@@ -2173,7 +2173,7 @@ object StreamingQueries {
       import graft.operators.{MvSum, MvCount}
       val adim = graft.operators.HierarchyQueries.dimension(s, d).aggregationDim
       val dir = mvRetractStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schema(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_rtmv").resolve("out").toString
       val ckpt = StreamingQueries.ckptScratchDir("graft_rtmv_ckpt")
@@ -2203,7 +2203,7 @@ object StreamingQueries {
     // append-only; retraction stays q84's batch-side contract).
     "st40_stream_quantile_mv" -> ((s, d) => {
       val dir = ordersMvStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schema(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_histmv").resolve("out").toString
       val ckpt = StreamingQueries.ckptScratchDir("graft_histmv_ckpt")
@@ -2228,7 +2228,7 @@ object StreamingQueries {
     // derivation over orders minus the retracted slice.
     "st43_stream_quantile_retraction" -> ((s, d) => {
       val dir = ordersRetractStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schema(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_histrt").resolve("out").toString
       val ckpt = StreamingQueries.ckptScratchDir("graft_histrt_ckpt")
@@ -2256,7 +2256,7 @@ object StreamingQueries {
       val docs = Tables.documents(s, d)
       val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
       val dir = ndStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schema(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_nd_sink").resolve("out").toString
       val ckpt = StreamingQueries.ckptScratchDir("graft_nd_ckpt")
@@ -2279,7 +2279,7 @@ object StreamingQueries {
       val emb = Tables.embeddings(s, d)
       val corpusEmb = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
       val dir = embStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schema(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_sem_sink").resolve("out").toString
       val ckpt = StreamingQueries.ckptScratchDir("graft_sem_ckpt")

@@ -1316,4 +1316,34 @@ class HierarchySpec extends SparkSpec {
     // every node's median lies within the corpus value range
     out.values.foreach(v => assert(v >= vals.head && v <= vals.last))
   }
+
+  test("after a first call, building a rollup entry runs no Spark job") {
+    // a build reads tables; an inferring read would run one job each,
+    // and Tables memoizes the schemas
+    val entries = Seq("h4_hier_agg", "h5_hier_agg_deep", "h6_hier_agg_parts",
+      "h8_hier_agg_approx", "h33_sql_rollup", "h35_shuffle_dim_rollup",
+      "h9_incremental_rollup")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def settled(): Int = {
+      var prev = -1; var cur = jobs.get(); var spins = 0
+      while (prev != cur && spins < 50) {
+        Thread.sleep(100); prev = cur; cur = jobs.get(); spins += 1
+      }
+      cur
+    }
+    entries.foreach(e => SparkEntry.queries(e)(spark, sf))
+    spark.sparkContext.addSparkListener(listener)
+    val built = try entries.map { e =>
+      val before = settled()
+      SparkEntry.queries(e)(spark, sf)
+      e -> (settled() - before)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(built.forall(_._2 == 0), s"jobs run while building: $built")
+  }
 }

@@ -64,15 +64,129 @@ class TablesSpec extends SparkSpec {
 
   test("every table at every sf dir matches the normalized schema contract") {
     assert(sfDirs.nonEmpty)
-    for (d <- sfDirs; name <- Tables.all) {
+    // the second pass reads through the memoized schema
+    for (pass <- 1 to 2; d <- sfDirs; name <- Tables.all) {
       val got = loader(name)(spark, d).schema
         .map(f => f.name -> f.dataType)
       val want = expected(name).map { case (n, t) => n -> t }
       assert(got == want,
-        s"SCHEMA DRIFT in $d/$name.parquet — regenerate-proof the loader " +
-          s"(Tables.normalizeTs/normalizeNtz) or update the contract.\n" +
+        s"SCHEMA DRIFT in $d/$name.parquet (pass $pass) — regenerate-proof " +
+          s"the loader (Tables.normalizeTs/normalizeNtz) or update the contract.\n" +
           s"  got:  $got\n  want: $want")
+      if (pass == 2) {
+        val path = s"$d/$name.parquet"
+        assert(Tables.schema(spark, path) eq Tables.schema(spark, path),
+          s"$path: the second read must hit the memo")
+      }
     }
+  }
+
+  private def scratchTable(): String =
+    java.nio.file.Files.createTempDirectory("graft_tables").resolve("t").toString
+
+  test("a table rewritten in place reads back with its new schema") {
+    import spark.implicits._
+    val dir = scratchTable()
+    Seq(1, 2).toDF("id").write.parquet(dir)
+    val first = Tables.read(spark, dir)
+    assert(first.schema.map(_.dataType) == Seq(IntegerType))
+    assert(Tables.schema(spark, dir) eq Tables.schema(spark, dir))
+    Seq((3L, "c")).toDF("id", "s").write.mode("overwrite").parquet(dir)
+    val again = Tables.read(spark, dir)
+    assert(again.schema.map(f => f.name -> f.dataType) ==
+      Seq("id" -> LongType, "s" -> StringType))
+    assert(again.as[(Long, String)].collect().toSeq == Seq((3L, "c")))
+  }
+
+  test("each read is a fresh relation: self-joins and new files behave") {
+    import spark.implicits._
+    val dir = scratchTable()
+    Seq((1L, 10L), (2L, 20L)).toDF("k", "v").write.parquet(dir)
+    val a = Tables.read(spark, dir)
+    val b = Tables.read(spark, dir)
+    assert(a.schema == b.schema)
+    val joined = a.join(b, a("k") === b("k") + 1).select(a("v"), b("v"))
+    assert(joined.as[(Long, Long)].collect().toSeq == Seq((20L, 10L)))
+    // an appended file changes the listing: the new rows are read
+    Seq((3L, 30L)).toDF("k", "v").write.mode("append").parquet(dir)
+    assert(Tables.read(spark, dir).count() == 3)
+  }
+
+  test("releasePins forgets memoized schemas; the next read infers again") {
+    val path = s"$sf/lineitem.parquet"
+    val before = Tables.schema(spark, path)
+    assert(Tables.schema(spark, path) eq before, "a hit returns the memo")
+    Graft.releasePins(spark)
+    val after = Tables.schema(spark, path)
+    assert((after ne before) && after == before,
+      "after releasePins the schema must be inferred again")
+  }
+
+  test("a changed inference setting is honoured, not served from the memo") {
+    val path = s"$sf/events.parquet" // ts is a timestamp without zone
+    val conf = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    def inferred = spark.read.parquet(path).schema("ts").dataType
+    def memoized = Tables.schema(spark, path)("ts").dataType
+    assert(memoized == TimestampNTZType)
+    spark.conf.set(conf, "false")
+    try {
+      assert(inferred == TimestampType, "the setting must change inference")
+      assert(memoized == TimestampType)
+    } finally spark.conf.unset(conf)
+    assert(memoized == TimestampNTZType)
+  }
+
+  test("a missing path fails as an inferring read does, and is not memoized") {
+    val dir = scratchTable()
+    intercept[org.apache.spark.sql.AnalysisException](Tables.read(spark, dir))
+    import spark.implicits._
+    Seq(1L).toDF("id").write.parquet(dir)
+    assert(Tables.read(spark, dir).count() == 1)
+  }
+
+  test("source gate: every inferring parquet read outside Tables.scala is listed") {
+    // (file, code) of each allowed `.read.parquet(` site, with the
+    // reason it must infer; a new site fails here until it goes
+    // through Tables.read / Tables.schema or is listed with a reason
+    val allowed = Seq(
+      ("streaming/StreamingOps.scala", "val store = spark.read.parquet(outDir)",
+        "readHistMvStore: checkMvSchema must see the on-disk schema"),
+      ("streaming/StreamingOps.scala", "val store = spark.read.parquet(outDir)",
+        "compactMvStore: checkMvSchema must see the on-disk schema"),
+      ("streaming/StreamingOps.scala", "val store = spark.read.parquet(outDir)",
+        "readMvFoldStore: checkMvSchema must see the on-disk schema"),
+      ("streaming/StreamingOps.scala", "s.read.parquet(out)",
+        "st16: a sink output written in the same call, read once"),
+      ("streaming/StreamingOps.scala", "s.read.parquet(out)",
+        "st11: a sink output written in the same call, read once"),
+      ("streaming/StreamingOps.scala", "s.read.parquet(out)",
+        "st18: a sink output written in the same call, read once"),
+      ("sources/Sources.scala", "spark.read.parquet(path).repartition(nFiles)",
+        "compaction reads a path once, then rewrites it"),
+      ("tools/UpscaleData.scala", "val df = spark.read.parquet(s\"$src/$t.parquet\")",
+        "offline tool, one read per table"),
+      ("tools/UpscaleData.scala",
+        "println(s\"[upscale] $t: ${df.count()} -> ${spark.read.parquet(s\"$out/$t.parquet\").count()} rows\")",
+        "offline tool, reads back what it just wrote"))
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val files = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(root).iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filterNot(_.getFileName.toString == "Tables.scala").toSeq
+    }
+    assert(files.size > 50, s"scanned only ${files.size} files under $root")
+    val hits = for {
+      f <- files
+      line <- scala.io.Source.fromFile(f.toFile, "UTF-8").getLines().toSeq
+      code = line.trim
+      if !code.startsWith("*") && !code.startsWith("//") && !code.startsWith("/*")
+      if code.split("//").head.contains(".read.parquet(")
+    } yield (root.relativize(f).toString, code)
+    val want = allowed.map { case (f, c, _) => (f, c) }
+    assert(hits.sorted == want.sorted,
+      s"inferring parquet reads changed.\n  found:  ${hits.sorted.mkString("\n    ")}" +
+        s"\n  listed: ${want.sorted.mkString("\n    ")}")
   }
 
   test("normalizeTs folds all three known ts encodings to the same instants") {
