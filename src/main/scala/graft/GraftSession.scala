@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 
 /** Session factory with the engine's standard tuning.
   *
@@ -24,6 +24,30 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
+
+  /** A session for one query's settings: a clone of `spark` (same
+    * context, cache and tables; its own conf, temp views and streaming
+    * query manager) with `settings` applied. Operators never change the
+    * caller's session config; a setting scoped to an operator's query
+    * goes through here, the one place the engine sets config at run
+    * time. A clone copies the caller's conf as it is at the call.
+    *
+    * A scoped session stays inside the operator that made it: it is
+    * never passed to `Tables` or `graft.Artifacts` (each would open a
+    * new per-session store, and past `Artifacts.MaxSessions` release
+    * the caller's), and frames built on it are rebound to the caller
+    * before they are returned.
+    */
+  def scoped(spark: SparkSession, settings: (String, String)*): SparkSession = {
+    val s = GraftColumnBridge.cloneSession(spark)
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  /** `df`'s plan as a frame of `spark`: a result built on a [[scoped]]
+    * session, handed back to its caller. */
+  def rebind(spark: SparkSession, df: DataFrame): DataFrame =
+    GraftColumnBridge.dataFrame(spark, df.queryExecution.analyzed)
 
   /** Local session for tests/benchmarks. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 
@@ -737,26 +737,21 @@ object Dedup {
     *   multiplying those through each round's joins grows the
     *   `sizeInBytes` BigInt geometrically until the driver spends
     *   minutes per round in BigInteger math;
-    * - AQE is disabled for the loop (restored after): its
+    * - the loop's eager jobs run on a scoped session
+    *   ([[graft.GraftSession.scoped]]) with AQE off — its
     *   stage-materialization queue has been observed to wait forever
-    *   on reused self-join exchanges over stat-less checkpoint frames.
+    *   on reused self-join exchanges over stat-less checkpoint frames —
+    *   and shuffle partitions sized to the edge set. The caller's
+    *   session is untouched, and the returned frame is the caller's:
+    *   its final join runs under the caller's settings.
     *
     * This is the step that turns pairwise near-dup hits into dedup
     * GROUPS (keep min doc_id per component, drop the rest).
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
       idCol: String = "doc_id", srcCol: String = "doc_a",
-      dstCol: String = "doc_b", maxIter: Int = 30): DataFrame = {
-    val spark = nodes.sparkSession
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val partsWas = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try connectedComponentsLoop(nodes, edges, idCol, srcCol, dstCol, maxIter)
-    finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", partsWas)
-    }
-  }
+      dstCol: String = "doc_b", maxIter: Int = 30): DataFrame =
+    connectedComponentsLoop(nodes, edges, idCol, srcCol, dstCol, maxIter)
 
   /** Materialize + truncate lineage + reset carried statistics. */
   private def materialized(df: DataFrame): DataFrame =
@@ -840,11 +835,16 @@ object Dedup {
       out)
   }
 
-  private def connectedComponentsLoop(nodes: DataFrame, edges: DataFrame,
-      idCol: String, srcCol: String, dstCol: String, maxIter: Int): DataFrame = {
-    val spark = nodes.sparkSession
+  /** [[connectedComponents]]; an edge set of at most
+    * `localEdgeThreshold` edges takes the single-task union-find. */
+  private[graft] def connectedComponentsLoop(nodes: DataFrame,
+      edges: DataFrame, idCol: String, srcCol: String, dstCol: String,
+      maxIter: Int, localEdgeThreshold: Long = 2000000L): DataFrame = {
+    val caller = nodes.sparkSession
+    val aqeOff = "spark.sql.adaptive.enabled" -> "false"
+    val edgesOff = GraftSession.rebind(GraftSession.scoped(caller, aqeOff), edges)
     var e = materialized(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      edgesOff.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .filter(col("src") =!= col("dst"))
         .distinct())
     // fixpoint signature: set equality via (count, order-independent
@@ -857,18 +857,17 @@ object Dedup {
     // to the edge set (~100k edges per partition, floor 8) instead of
     // running every tiny stage at the session's fact-scale setting
     val loopParts = math.max(8L, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toLong,
+      caller.conf.get("spark.sql.shuffle.partitions").toLong,
       eSig.getLong(0) / 100000L + 1L))
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts)
+    e = GraftSession.rebind(GraftSession.scoped(caller, aqeOff,
+      "spark.sql.shuffle.partitions" -> loopParts.toString), e)
     // Adaptive: an edge set that comfortably fits ONE task is solved
     // exactly by a single-pass union-find (one job, no rounds) — at
     // dedup-pipeline scales the edge list is a tiny fraction of the
     // corpus, so this is the common case; the star rounds below are
     // the arbitrarily-large fallback. The payload never touches the
     // driver: coalesce(1) + a partition-local algorithm.
-    val localThreshold = spark.conf
-      .get("spark.graft.cc.localEdgeThreshold", "2000000").toLong
-    if (eSig.getLong(0) > 0 && eSig.getLong(0) <= localThreshold) {
+    if (eSig.getLong(0) > 0 && eSig.getLong(0) <= localEdgeThreshold) {
       val idType = e.schema("src").dataType
       val labeled = localUnionFind(e, idType)
       return nodes.select(col(idCol))
@@ -887,9 +886,6 @@ object Dedup {
         starRound(materialized(starRound(e, large = true)), large = false))
       val nextSig = sig(next)
       converged = nextSig == eSig
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $iter edges=${nextSig.getLong(0)} " +
-          s"t=${System.nanoTime() / 1000000}ms")
       e = next
       eSig = nextSig
       iter += 1

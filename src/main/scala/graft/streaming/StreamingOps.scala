@@ -1,9 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Dataset, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, StreamingQueryListener}
+import org.apache.spark.sql.types.StructType
+import graft.{GraftSession, Tables}
 
 /** Streaming operator family (SURVEY.md §2.G) over the events table.
   *
@@ -530,15 +537,42 @@ object StreamingOpsSinks {
     * currently-available input is fully processed.
     */
   def streamToParquet(df: org.apache.spark.sql.DataFrame, outDir: String,
-      checkpointDir: String): Unit = {
-    val q = df.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+      checkpointDir: String): Unit =
+    StreamingQueries.run(parquetSink(df, outDir), Some(checkpointDir))
+
+  /** `df` appended to the parquet directory `outDir` by Spark's file
+    * sink. */
+  private[streaming] def parquetSink(df: DataFrame, outDir: String)
+      : DataStreamWriter[Row] =
+    df.writeStream.outputMode("append").format("parquet").option("path", outDir)
+
+  /** The durable sinks' one writer: run the stream of `streamDir`
+    * ([[StreamingQueries.drive]], foreachBatch-fold partitions) and
+    * land each micro-batch's `partial` as exactly its own `batch_id=N`
+    * partition of `outDir` (dynamic partition overwrite). A partial
+    * deterministic in its batch makes the write IDEMPOTENT: a batch
+    * REPLAYED after a crash (checkpoint WAL says uncommitted) rewrites
+    * byte-identical content over itself rather than appending
+    * duplicates. Checkpoint WAL + deterministic partial + idempotent
+    * partition write = end-to-end exactly-once for the sink directory;
+    * readers see only whole partitions.
+    */
+  private def batchPartitionSink(spark: SparkSession, streamDir: String,
+      schema: StructType, outDir: String, checkpointDir: String,
+      maxFilesPerTrigger: Int)(partial: DataFrame => DataFrame): Unit =
+    StreamingQueries.drive(spark, streamDir, schema, StreamingQueries.BatchParts,
+        Some(maxFilesPerTrigger), Some(checkpointDir)) { stream =>
+      stream.writeStream.outputMode("update").foreachBatch {
+        (batch: Dataset[Row], batchId: Long) =>
+          partial(batch.toDF())
+            .withColumn("batch_id", lit(batchId))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(outDir)
+          ()
+      }
+    }
 
   /** EXACTLY-ONCE continuous near-dup ingest: each arriving
     * micro-batch of documents is classified against the STATIC corpus
@@ -550,15 +584,9 @@ object StreamingOpsSinks {
     * Why not the native file sink: the classification needs a
     * batch-side argmax aggregate (best corpus match per doc), which a
     * watermark-free document stream cannot express in append mode —
-    * so the write goes through `foreachBatch` and is made IDEMPOTENT
-    * instead: every micro-batch overwrites exactly its own
-    * `batch_id=N` partition (dynamic partition overwrite). The
-    * classification is deterministic in (corpus, batch), so a batch
-    * REPLAYED after a crash (checkpoint WAL says uncommitted)
-    * rewrites byte-identical content over itself rather than
-    * appending duplicates. Checkpoint WAL + deterministic transform +
-    * idempotent partition write = end-to-end exactly-once for the
-    * sink directory; readers see only whole partitions.
+    * so the write goes through [[batchPartitionSink]] and is made
+    * IDEMPOTENT instead: the classification is deterministic in
+    * (corpus, batch), so a replayed batch rewrites its own partition.
     *
     * Scale shape is st10's: the corpus index is static per run; only
     * the arriving batch pays the shingle/verify work.
@@ -567,9 +595,6 @@ object StreamingOpsSinks {
       streamDir: String, schema: org.apache.spark.sql.types.StructType,
       outDir: String, checkpointDir: String,
       minJaccard: Double = 0.5, maxFilesPerTrigger: Int = 1): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(streamDir)
     // shingle/band the corpus ONCE for the stream's lifetime — the
     // persisted-index contract (st18's codebook shape); per batch
     // only the arriving docs pay the shingle work. Materialized LEAF
@@ -579,23 +604,10 @@ object StreamingOpsSinks {
     // released at stream close so every run rebuilds its index
     val index = graft.Artifacts.leaf(
       graft.operators.Dedup.prepNearDupIndex(corpus))
-    val q = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          graft.operators.Dedup
-            .incrementalNearDupPrepped(index, batch.toDF(), minJaccard = minJaccard)
-            .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outDir)
-          ()
-      }
-      .start()
-    try q.processAllAvailable() finally { q.stop(); graft.Artifacts.release(index) }
+    try batchPartitionSink(spark, streamDir, schema, outDir, checkpointDir,
+      maxFilesPerTrigger)(batch => graft.operators.Dedup
+        .incrementalNearDupPrepped(index, batch, minJaccard = minJaccard))
+    finally graft.Artifacts.release(index)
   }
 
   /** EXACTLY-ONCE continuous SEMANTIC-dedup ingest — st11's durable
@@ -606,7 +618,7 @@ object StreamingOpsSinks {
     * maintained with the corpus), then each arriving micro-batch of
     * embeddings is assigned to its nearest centroid (narrow codegen'd
     * map), verified against ONLY its cluster's corpus members, and
-    * landed via the idempotent `batch_id`-partition overwrite.
+    * landed via [[batchPartitionSink]].
     * Classification is deterministic in (index, row) — seeded k-means,
     * no RNG — so a crash-replayed batch rewrites byte-identical
     * content: checkpoint WAL + deterministic transform + idempotent
@@ -620,26 +632,9 @@ object StreamingOpsSinks {
       graft.operators.Similarity.semanticIndex(corpusEmb, targetClusterSize)
     val cent = centroids.localCheckpoint()
     val index = idx.localCheckpoint()
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(streamDir)
-    val q = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          graft.operators.Similarity
-            .classifyAgainstIndex(cent, index, batch.toDF(), tau)
-            .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outDir)
-          ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    batchPartitionSink(spark, streamDir, schema, outDir, checkpointDir,
+      maxFilesPerTrigger)(batch =>
+      graft.operators.Similarity.classifyAgainstIndex(cent, index, batch, tau))
   }
 
   /** EXACTLY-ONCE durable streaming MV — the replay gap st37's
@@ -649,10 +644,7 @@ object StreamingOpsSinks {
     * so the durable store holds BATCH-PARTIAL rows instead of a
     * rolling total. Each micro-batch aggregates its delta to MV grain
     * ([[graft.operators.MvFold.build]] — deterministic in the batch)
-    * and overwrites exactly its own `batch_id=N` partition; a
-    * crash-replayed batch rewrites byte-identical partials over
-    * itself. Checkpoint WAL + deterministic partial + idempotent
-    * partition write = end-to-end exactly-once. Readout is ONE
+    * and lands it through [[batchPartitionSink]]. Readout is ONE
     * bounded merge-aggregate over the stored partials
     * ([[graft.operators.MvFold.merge]] — batches × grain rows, never
     * facts); a maintenance job can compact old partials with the same
@@ -674,43 +666,22 @@ object StreamingOpsSinks {
       outDir: String, checkpointDir: String,
       keys: Seq[String], measures: Seq[graft.operators.MvMeasure],
       maxFilesPerTrigger: Int = 1,
-      weightCol: Option[String] = None): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(streamDir)
-    val q = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val partial = weightCol match {
-            case None => graft.operators.MvFold.build(batch.toDF(), keys, measures)
-            case Some(w) => graft.operators.MvFold.buildSigned(
-              batch.toDF(), keys, measures,
-              org.apache.spark.sql.functions.col(w).cast("long"))
-          }
-          partial
-            .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outDir)
-          ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+      weightCol: Option[String] = None): Unit =
+    batchPartitionSink(spark, streamDir, schema, outDir, checkpointDir,
+      maxFilesPerTrigger)(batch => weightCol match {
+      case None => graft.operators.MvFold.build(batch, keys, measures)
+      case Some(w) => graft.operators.MvFold.buildSigned(
+        batch, keys, measures, col(w).cast("long"))
+    })
 
   /** EXACTLY-ONCE durable streaming QUANTILE MV — q84's histogram MV
     * as a continuous sink, st38's durability protocol: each
     * micro-batch bucketizes its rows ([[graft.operators.MvFold.buildHist]]
-    * — deterministic integer bucket math) and overwrites exactly its
-    * own `batch_id=N` partition with (keys, bucket)-grain signed
-    * counts; checkpoint WAL + deterministic partial + idempotent
-    * partition write = end-to-end exactly-once, and bucket counts are
-    * additive so the read-off ([[readHistMvStore]]) is one bounded
-    * merge over batches × (keys × buckets) rows, never facts. `value`
+    * — deterministic integer bucket math) and lands its (keys,
+    * bucket)-grain signed counts through [[batchPartitionSink]]
+    * (end-to-end exactly-once); bucket counts are additive, so the
+    * read-off ([[readHistMvStore]]) is one bounded merge over
+    * batches × (keys × buckets) rows, never facts. `value`
     * must be a non-null integer column (the cents convention —
     * [[graft.operators.MvFold.buildHist]]'s contract).
     */
@@ -720,34 +691,14 @@ object StreamingOpsSinks {
       keys: Seq[String], value: org.apache.spark.sql.Column,
       lo: Long, hi: Long, buckets: Int,
       maxFilesPerTrigger: Int = 1,
-      weightCol: Option[String] = None): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(streamDir)
-    val q = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val partial = weightCol match {
-            case None => graft.operators.MvFold
-              .buildHist(batch.toDF(), keys, value, lo, hi, buckets)
-            case Some(w) => graft.operators.MvFold
-              .buildHistSigned(batch.toDF(), keys, value, lo, hi, buckets,
-                org.apache.spark.sql.functions.col(w).cast("long"))
-          }
-          partial
-            .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outDir)
-          ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+      weightCol: Option[String] = None): Unit =
+    batchPartitionSink(spark, streamDir, schema, outDir, checkpointDir,
+      maxFilesPerTrigger)(batch => weightCol match {
+      case None => graft.operators.MvFold
+        .buildHist(batch, keys, value, lo, hi, buckets)
+      case Some(w) => graft.operators.MvFold
+        .buildHistSigned(batch, keys, value, lo, hi, buckets, col(w).cast("long"))
+    })
 
   /** Read a [[streamHistMvToParquet]] store: merge the bucket partials
     * and read quantiles at `percents` via the exact integer rank-walk
@@ -1109,51 +1060,109 @@ object StreamingQueries {
     * remove unnecessary passes).
     */
 
-  /** Per-run scratch root for STREAMING CHECKPOINTS (offset WAL,
-    * commit log, state store). These are run-local throwaways here —
-    * every bench/oracle run starts a fresh stream on a fresh dir — so
-    * they go to the fastest local filesystem available: `/dev/shm`
-    * when writable (the checkpoint fsync is a pure per-batch tax on a
-    * disk-backed /tmp: StreamProf measured walCommit+commitOffsets ≈
-    * 0.07 s/batch on ext4), else the JVM tmpdir. A production
-    * deployment parameterizes this to durable storage —
-    * SPARK_GRAFT_STREAM_TMP overrides the root (set it to a
-    * disk-backed path to restore the old behavior); sink OUTPUT
-    * directories are not affected, only checkpoints.
+  /** Shuffle partitions of a stream's scoped session. Stateful
+    * streaming keeps one state store per shuffle partition per stateful
+    * operator (four for a stream-stream join), and the count fixes the
+    * query's state layout for its lifetime; at fixture scale a large
+    * count is pure store-setup overhead. The memory-sink and stateful
+    * entries and st16 run at [[StatefulParts]]; the foreachBatch folds
+    * and the durable sinks at [[BatchParts]].
     */
-  private[graft] def ckptScratchDir(prefix: String): String = {
-    val base = sys.env.get("SPARK_GRAFT_STREAM_TMP")
-      .map(java.nio.file.Paths.get(_))
-      .orElse {
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        if (java.nio.file.Files.isDirectory(shm) &&
-            java.nio.file.Files.isWritable(shm)) Some(shm) else None
-      }
-    (base match {
-      case Some(b) => java.nio.file.Files.createTempDirectory(b, prefix)
-      case None => java.nio.file.Files.createTempDirectory(prefix)
-    }).toString
+  private[streaming] val StatefulParts = 4
+  private[streaming] val BatchParts = 8
+
+  /** Root of the scratch STREAMING CHECKPOINTS (offset WAL, commit
+    * log, state store). A registry entry's stream starts fresh on a
+    * fresh checkpoint every call, so these go to the fastest local
+    * filesystem available: `/dev/shm` when writable (the checkpoint
+    * fsync is a pure per-batch tax on a disk-backed /tmp: StreamProf
+    * measured walCommit+commitOffsets ≈ 0.07 s/batch on ext4), else
+    * the JVM tmpdir. SPARK_GRAFT_STREAM_TMP overrides the root; sink
+    * OUTPUT directories are not affected, only checkpoints.
+    */
+  private[graft] def scratchRoot: Path =
+    sys.env.get("SPARK_GRAFT_STREAM_TMP").map(Paths.get(_)).getOrElse {
+      val shm = Paths.get("/dev/shm")
+      if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
+      else Paths.get(sys.props("java.io.tmpdir"))
+    }
+
+  /** `f` over a fresh checkpoint directory under [[scratchRoot]],
+    * deleted once `f` returns or throws. */
+  private def withScratchCheckpoint[T](f: String => T): T = {
+    val ckpt = Files.createTempDirectory(scratchRoot, "graft_stream_ckpt")
+    try f(ckpt.toString)
+    finally try {
+      Files.walk(ckpt).iterator().asScala.toSeq
+        .sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
+    } catch { case NonFatal(_) => () }
   }
 
-  /** Start a configured writeStream on a scratch checkpoint
-    * ([[ckptScratchDir]]), drain it, and delete the checkpoint — the
-    * foreachBatch registry entries previously relied on Spark's
-    * implicit temp checkpoint (disk-backed JVM tmpdir); an explicit
-    * scratch dir is not auto-deleted, so this helper owns the cleanup.
-    */
-  private def drainWithScratchCkpt(
-      w: org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row]): Unit = {
-    val ckpt = java.nio.file.Paths.get(ckptScratchDir("graft_fb_ckpt"))
-    val q = w.option("checkpointLocation", ckpt.toString).start()
-    try q.processAllAvailable() finally q.stop()
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    } catch { case _: Throwable => () }
+  /** Start `writer` on `checkpoint` (a scratch one, deleted after the
+    * stream stops, when None), process everything available, stop.
+    * The engine's one place that runs a stream; a kept checkpoint lets
+    * a later run resume where this one committed. */
+  private[streaming] def run(writer: DataStreamWriter[Row],
+      checkpoint: Option[String]): StreamingQuery = {
+    def go(ckpt: String): StreamingQuery = {
+      val q = writer.option("checkpointLocation", ckpt).start()
+      try q.processAllAvailable() finally q.stop()
+      q
+    }
+    checkpoint.fold(withScratchCheckpoint(go))(go)
   }
+
+  /** The stream driver: open `dir` as a parquet file stream with
+    * `schema`, `maxFilesPerTrigger` files per micro-batch (every file
+    * in one batch when None), on a session scoped from `caller` with
+    * `parts` shuffle partitions, and [[run]] `writer` over it. The
+    * caller's config is never touched, so concurrent callers of one
+    * session do not see each other's settings. What the sink registers
+    * (a memory sink's view) lives on the scoped session, which the
+    * returned, stopped query carries as `sparkSession`.
+    */
+  private[streaming] def drive(caller: SparkSession, dir: String,
+      schema: StructType, parts: Int, maxFilesPerTrigger: Option[Int] = Some(1),
+      checkpoint: Option[String] = None)(
+      writer: DataFrame => DataStreamWriter[Row]): StreamingQuery = {
+    val scoped = GraftSession.scoped(caller,
+      "spark.sql.shuffle.partitions" -> parts.toString)
+    // the scoped session has its own streaming query manager: it
+    // reports to exactly the caller's listeners
+    scoped.streams.listListeners().foreach(scoped.streams.removeListener)
+    caller.streams.listListeners().foreach(scoped.streams.addListener)
+    val unhook = new Unhook(scoped)
+    scoped.streams.addListener(unhook)
+    val reader = maxFilesPerTrigger.foldLeft(scoped.readStream.schema(schema))(
+      (r, n) => r.option("maxFilesPerTrigger", n.toString))
+    try run(writer(reader.parquet(dir)), checkpoint)
+    finally if (!unhook.started) unhook()
+  }
+
+  /** A session's streaming query manager hooks its listener bus into
+    * the context's event bus for the life of the context. A scoped
+    * session runs one stream, so its bus is unhooked once that stream
+    * has terminated (after the caller's listeners got every event of
+    * it), or at once if it never started. */
+  private final class Unhook(scoped: SparkSession) extends StreamingQueryListener {
+    @volatile var started = false
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+      started = true
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      apply()
+    def apply(): Unit = GraftColumnBridge.unhookStreamBus(scoped, this)
+  }
+
+  /** A foreachBatch fold over the fixture `dir`, one file per
+    * micro-batch: `fold` sees each batch's rows in arrival order. */
+  private def foldStream(s: SparkSession, dir: String)(
+      fold: DataFrame => Unit): Unit =
+    drive(s, dir, Tables.schema(s, dir), BatchParts) { stream =>
+      stream.writeStream.outputMode("update").foreachBatch {
+        (batch: Dataset[Row], _: Long) => fold(batch.toDF())
+      }
+    }
 
   private def mvStreamDir(s: SparkSession, d: String): String =
     graft.Artifacts.memo(s, "stream.mv", d) {
@@ -1331,62 +1340,43 @@ object StreamingQueries {
     docsStreamDir(s, d); ()
   }
 
+  /** The events file as a stream source: FileStreamSource reads a
+    * directory, so this is one holding a symlink to it. */
+  private def eventsStreamDir(s: SparkSession, d: String): String =
+    graft.Artifacts.memo(s, "stream.events", d) {
+      val dir = Files.createTempDirectory("graft_stream")
+      Files.createSymbolicLink(dir.resolve("events.parquet"),
+        Paths.get(s"$d/events.parquet"))
+      dir.toString
+    }
+
+  /** [[drive]] over the events source, read as ONE micro-batch (a
+    * watermarked append query over several batches would drop the
+    * rows a later batch brings in late). ONE ts normalization for
+    * batch and stream: Tables.normalizeTs branches on the physical
+    * encoding (nanos-long / NTZ / timestamp). */
+  private def driveEvents(s: SparkSession, d: String)(
+      writer: DataFrame => DataStreamWriter[Row]): StreamingQuery =
+    drive(s, eventsStreamDir(s, d), Tables.schema(s, s"$d/events.parquet"),
+      StatefulParts, maxFilesPerTrigger = None)(ev => writer(Tables.normalizeTs(ev)))
+
   /** Drive a Structured Streaming query over the events parquet to
-    * completion and return the (batch) result: the file is exposed
-    * through a temp-dir symlink (FileStreamSource wants a directory),
-    * read with `readStream`, written to a uniquely-named memory sink in
-    * complete mode, and `processAllAvailable()` blocks until the stream
-    * has consumed everything. The registered streaming forms run
-    * through the SAME driver gate as every batch query — st3 shares
-    * st1's oracle (watermarked streaming agg ≡ batch agg), st4 has a
-    * session-identity oracle.
+    * completion and return the (batch) result: `build` runs over the
+    * event stream into a uniquely-named memory sink in `outputMode`,
+    * and the sink's contents come back as a frame of `spark` (its view
+    * stays on the stream's scoped session). The registered streaming
+    * forms run through the SAME driver gate as every batch query — st3
+    * shares st1's oracle (watermarked streaming agg ≡ batch agg), st4
+    * has a session-identity oracle.
     */
   private def runStream(spark: SparkSession, sfDir: String,
-      outputMode: String = "complete", parts: Int = 4)(
+      outputMode: String = "complete")(
       build: DataFrame => DataFrame): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
-    java.nio.file.Files.createSymbolicLink(
-      dir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"))
-    val schema = Tables.schema(spark, s"$sfDir/events.parquet")
-    val raw = spark.readStream.schema(schema).parquet(dir.toString)
-    // ONE ts normalization for batch and stream: Tables.normalizeTs
-    // branches on the physical encoding (nanos-long / NTZ / timestamp),
-    // so a driver-side re-encode of events.parquet can't silently
-    // diverge the two paths again
-    val ev = Tables.normalizeTs(raw)
     val qname = "graft_stream_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    // Stateful streaming allocates one state store PER shuffle
-    // partition per stateful operator (×4 for stream-stream joins);
-    // at bench scale 32 partitions is pure store-setup overhead. The
-    // partition count is a per-query knob in production (it fixes the
-    // state layout for the query's lifetime) — scope it down here and
-    // restore the session setting afterwards.
-    val partsWas = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    // explicit scratch checkpoint (tmpfs when available — see
-    // ckptScratchDir): the memory sink otherwise gets a Spark temp
-    // checkpoint on the disk-backed JVM tmpdir, and the stateful
-    // entries pay offset-WAL + state-store fsync per micro-batch
-    // there. Deleted after the stream closes (Spark only auto-deletes
-    // ITS OWN temp checkpoints).
-    val ckpt = java.nio.file.Paths.get(ckptScratchDir("graft_stream_ckpt"))
-    try {
-      val q = build(ev).writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode(outputMode).format("memory").queryName(qname).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", partsWas)
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      } catch { case _: Throwable => () }
-    }
-    spark.table(qname)
+    val q = driveEvents(spark, sfDir)(ev => build(ev).writeStream
+      .outputMode(outputMode).format("memory").queryName(qname))
+    GraftSession.rebind(spark, q.sparkSession.table(qname))
   }
 
   /** q61's Holt level+trend fold over a FINALIZED (event_type, d, c)
@@ -1483,22 +1473,9 @@ object StreamingQueries {
     // oracle (st13's closed-window SQL) checks windowing, emission
     // and durability together.
     "st16_stream_histogram_sink" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_hist_src")
-      java.nio.file.Files.createSymbolicLink(
-        dir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$d/events.parquet"))
-      val schema = Tables.schema(s, s"$d/events.parquet")
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_hist_sink").resolve("out").toString
-      val ckpt = StreamingQueries.ckptScratchDir("graft_hist_ckpt")
-      val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val ev = Tables.normalizeTs(
-          s.readStream.schema(schema).parquet(dir.toString))
-        StreamingOpsSinks.streamToParquet(
-          StreamingOps.histogramStream(ev), out, ckpt)
-      } finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
+      val out = Files.createTempDirectory("graft_hist_sink").resolve("out").toString
+      driveEvents(s, d)(ev =>
+        StreamingOpsSinks.parquetSink(StreamingOps.histogramStream(ev), out))
       s.read.parquet(out)
         .select("window_start", "bucket", "n_events", "sum_value")
     }),
@@ -1766,23 +1743,12 @@ object StreamingQueries {
     // (h4's SQL): maintenance must be result-identical to recomputing.
     "st9_incremental_rollup_stream" -> ((s, d) => {
       val adim = graft.operators.HierarchyQueries.dimension(s, d).aggregationDim
-      val dir = mvStreamDir(s, d)
-      val schema = Tables.schema(s, dir)
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
       var mv: DataFrame = null
-      val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        drainWithScratchCkpt(stream.writeStream.outputMode("update")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val delta = batch.toDF()
-            mv = (if (mv == null) graft.operators.HierarchyAgg.rollupMv(delta, adim)
-                  else graft.operators.HierarchyAgg.mergeRollupMv(mv, delta, adim))
-              .localCheckpoint()
-            ()
-          })
-      } finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
+      foldStream(s, mvStreamDir(s, d)) { delta =>
+        mv = (if (mv == null) graft.operators.HierarchyAgg.rollupMv(delta, adim)
+              else graft.operators.HierarchyAgg.mergeRollupMv(mv, delta, adim))
+          .localCheckpoint()
+      }
       graft.operators.HierarchyAgg.finalizeRollup(mv, adim)
     }),
     // STREAMING EXACT-DISTINCT MV (h24 as a continuous process): each
@@ -1796,25 +1762,14 @@ object StreamingQueries {
     // full recompute.
     "st23_stream_distinct_mv" -> ((s, d) => {
       val adim = graft.operators.HierarchyQueries.dimension(s, d).aggregationDim
-      val dir = mvStreamDir(s, d)
-      val schema = Tables.schema(s, dir)
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
       var mv: DataFrame = null
-      val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        drainWithScratchCkpt(stream.writeStream.outputMode("update")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val delta = batch.toDF()
-            mv = (if (mv == null)
-                    graft.operators.HierarchyAgg.distinctMv(delta, adim, 1 << 21)
-                  else
-                    graft.operators.HierarchyAgg.mergeDistinctMv(mv, delta, adim, 1 << 21))
-              .localCheckpoint()
-            ()
-          })
-      } finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
+      foldStream(s, mvStreamDir(s, d)) { delta =>
+        mv = (if (mv == null)
+                graft.operators.HierarchyAgg.distinctMv(delta, adim, 1 << 21)
+              else
+                graft.operators.HierarchyAgg.mergeDistinctMv(mv, delta, adim, 1 << 21))
+          .localCheckpoint()
+      }
       graft.operators.HierarchyAgg.readDistinctMv(mv)
     }),
     // STREAMING near-dup ingest: d11's batch side arrives as a stream
@@ -1829,30 +1784,17 @@ object StreamingQueries {
     "st10_stream_neardup" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      val dir = ndStreamDir(s, d)
-      val schema = Tables.schema(s, dir)
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
       var acc: DataFrame = null
-      val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
       // corpus index built once for the stream (the persisted-index
       // contract); per batch only the arriving docs shingle
       val index = graft.Artifacts.leaf(
         graft.operators.Dedup.prepNearDupIndex(corpus))
-      try {
-        drainWithScratchCkpt(stream.writeStream.outputMode("update")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val classified = graft.operators.Dedup
-              .incrementalNearDupPrepped(index, batch.toDF(), minJaccard = 0.05)
-              .localCheckpoint()
-            acc = if (acc == null) classified else acc.unionByName(classified)
-            ()
-          })
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", partsWas)
-        graft.Artifacts.release(index)
-      }
+      try foldStream(s, ndStreamDir(s, d)) { batch =>
+        val classified = graft.operators.Dedup
+          .incrementalNearDupPrepped(index, batch, minJaccard = 0.05)
+          .localCheckpoint()
+        acc = if (acc == null) classified else acc.unionByName(classified)
+      } finally graft.Artifacts.release(index)
       acc
     }),
     // STREAMING DECONTAMINATION GATE (round 17; d8 re-based on a
@@ -1866,27 +1808,14 @@ object StreamingQueries {
     "st34_stream_decontam" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val eval = docs.filter(pmod(col("doc_id"), lit(50)) === 0)
-      val dir = decontamStreamDir(s, d)
-      val schema = Tables.schema(s, dir)
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
       var acc: DataFrame = null
-      val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
       val index = graft.Artifacts.leaf(graft.operators.Dedup.evalGramIndex(eval))
-      try {
-        drainWithScratchCkpt(stream.writeStream.outputMode("update")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val flagged = graft.operators.Dedup
-              .decontaminatePrepped(batch.toDF(), index)
-              .localCheckpoint()
-            acc = if (acc == null) flagged else acc.unionByName(flagged)
-            ()
-          })
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", partsWas)
-        graft.Artifacts.release(index)
-      }
+      try foldStream(s, decontamStreamDir(s, d)) { batch =>
+        val flagged = graft.operators.Dedup
+          .decontaminatePrepped(batch, index)
+          .localCheckpoint()
+        acc = if (acc == null) flagged else acc.unionByName(flagged)
+      } finally graft.Artifacts.release(index)
       if (acc == null)
         graft.operators.Dedup.decontaminate(docs.limit(0), eval)
       else acc
@@ -1903,31 +1832,19 @@ object StreamingQueries {
     // runs before a scraped image reaches training storage.
     "st35_stream_subimage" -> ((s, d) => {
       val dir = tilesStreamDir(s, d)
-      val schema = Tables.schema(s, dir)
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
       var acc: DataFrame = null
-      val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
       val catalogTiles = graft.operators.Multimodal
         .imageTiles(s, Tables.read(s, dir), patch = 4).toDF()
       val index = graft.Artifacts.leaf(
         graft.operators.Multimodal.subimageIndex(catalogTiles))
-      try {
-        drainWithScratchCkpt(stream.writeStream.outputMode("update")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val tiles = graft.operators.Multimodal
-              .imageTiles(s, batch.toDF(), patch = 4).toDF()
-            val pairs = graft.operators.Multimodal
-              .subimageProbePrepped(index, tiles)
-              .localCheckpoint()
-            acc = if (acc == null) pairs else acc.unionByName(pairs)
-            ()
-          })
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", partsWas)
-        graft.Artifacts.release(index)
-      }
+      try foldStream(s, dir) { batch =>
+        val tiles = graft.operators.Multimodal
+          .imageTiles(s, batch, patch = 4).toDF()
+        val pairs = graft.operators.Multimodal
+          .subimageProbePrepped(index, tiles)
+          .localCheckpoint()
+        acc = if (acc == null) pairs else acc.unionByName(pairs)
+      } finally graft.Artifacts.release(index)
       if (acc == null)
         graft.operators.Multimodal.subimageMatches(catalogTiles.limit(0))
       else acc
@@ -1945,23 +1862,14 @@ object StreamingQueries {
     // #1 operational failure.
     "st36_stream_quarantine" -> ((s, d) => {
       val dir = quarantineStreamDir(s, d)
-      val schema = Tables.schema(s, dir)
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
       var acc: DataFrame = null
-      val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        drainWithScratchCkpt(stream.writeStream.outputMode("update")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val out = graft.operators.Multimodal
-              .extractFeaturesQuarantine(s, batch.toDF(),
-                new graft.operators.Multimodal.BmpCodec)
-              .toDF().localCheckpoint()
-            acc = if (acc == null) out else acc.unionByName(out)
-            ()
-          })
-      } finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
+      foldStream(s, dir) { batch =>
+        val out = graft.operators.Multimodal
+          .extractFeaturesQuarantine(s, batch,
+            new graft.operators.Multimodal.BmpCodec)
+          .toDF().localCheckpoint()
+        acc = if (acc == null) out else acc.unionByName(out)
+      }
       if (acc == null)
         graft.operators.Multimodal.extractFeaturesQuarantine(s,
           Tables.read(s, dir).limit(0),
@@ -1984,10 +1892,6 @@ object StreamingQueries {
     "st39_stream_datasheet" -> ((s, d) => {
       import graft.operators.{MvFold, MvSum, MvCount}
       import graft.functions.TextFunctions._
-      val dir = docsStreamDir(s, d)
-      val schema = Tables.schema(s, dir)
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
       def perDoc(df: DataFrame): DataFrame = df
         .withColumn("toks", tokens(lower(col("text"))))
         .withColumn("n_toks", size(col("toks")).cast("long"))
@@ -2015,31 +1919,25 @@ object StreamingQueries {
       val hMeasures = Seq(MvCount("cnt"))
       var sigMv: DataFrame = null
       var hashMv: DataFrame = null
-      val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        drainWithScratchCkpt(stream.writeStream.outputMode("update")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            // materialize the per-doc signals ONCE per batch (r22):
-            // both MV folds read `delta`, and as a lazy frame the
-            // whole tokenize/markerCount/sha2 pass ran twice per
-            // batch — once inside each fold's localCheckpoint job.
-            // Project to the measure inputs first so the checkpoint
-            // holds narrow signal columns, not the token arrays/text
-            // (guide §2.3: narrow what you materialize)
-            val delta = perDoc(batch.toDF())
-              .withColumn("n_chars_in", length(col("text")).cast("long"))
-              .select("source", "n_toks", "n_chars_in", "pred", "q", "__key")
-              .localCheckpoint()
-            sigMv = (if (sigMv == null) MvFold.build(delta, sKeys, sMeasures)
-                     else MvFold.fold(sigMv, delta, sKeys, sMeasures))
-              .localCheckpoint()
-            hashMv = (if (hashMv == null) MvFold.build(delta, hKeys, hMeasures)
-                      else MvFold.fold(hashMv, delta, hKeys, hMeasures))
-              .localCheckpoint()
-            ()
-          })
-      } finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
+      foldStream(s, docsStreamDir(s, d)) { batch =>
+        // materialize the per-doc signals ONCE per batch (r22): both
+        // MV folds read `delta`, and as a lazy frame the whole
+        // tokenize/markerCount/sha2 pass ran twice per batch — once
+        // inside each fold's localCheckpoint job. Project to the
+        // measure inputs first so the checkpoint holds narrow signal
+        // columns, not the token arrays/text (guide §2.3: narrow what
+        // you materialize)
+        val delta = perDoc(batch)
+          .withColumn("n_chars_in", length(col("text")).cast("long"))
+          .select("source", "n_toks", "n_chars_in", "pred", "q", "__key")
+          .localCheckpoint()
+        sigMv = (if (sigMv == null) MvFold.build(delta, sKeys, sMeasures)
+                 else MvFold.fold(sigMv, delta, sKeys, sMeasures))
+          .localCheckpoint()
+        hashMv = (if (hashMv == null) MvFold.build(delta, hKeys, hMeasures)
+                  else MvFold.fold(hashMv, delta, hKeys, hMeasures))
+          .localCheckpoint()
+      }
       require(sigMv != null && hashMv != null, "empty stream source")
       val hashes = MvFold.read(hashMv, hKeys, hMeasures)
       val totals = hashes.groupBy("__key").agg(sum("cnt").as("total"))
@@ -2070,26 +1968,16 @@ object StreamingQueries {
     "st37_stream_mv_fold" -> ((s, d) => {
       import graft.operators.{MvFold, MvSum, MvCount, MvBitmapDistinct}
       val dir = ordersMvStreamDir(s, d)
-      val schema = Tables.schema(s, dir)
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
       val keys = Seq("o_orderpriority", "order_year")
       val measures = Seq(MvSum("sum_cents", col("cents")),
         MvCount("n_orders"),
         MvBitmapDistinct("distinct_cust", col("o_custkey"), 1 << 21))
       var mv: DataFrame = null
-      val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        drainWithScratchCkpt(stream.writeStream.outputMode("update")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val delta = batch.toDF()
-            mv = (if (mv == null) MvFold.build(delta, keys, measures)
-                  else MvFold.fold(mv, delta, keys, measures))
-              .localCheckpoint()
-            ()
-          })
-      } finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
+      foldStream(s, dir) { delta =>
+        mv = (if (mv == null) MvFold.build(delta, keys, measures)
+              else MvFold.fold(mv, delta, keys, measures))
+          .localCheckpoint()
+      }
       if (mv == null)
         mv = MvFold.build(Tables.read(s, dir).limit(0), keys, measures)
       MvFold.read(mv, keys, measures)
@@ -2113,16 +2001,12 @@ object StreamingQueries {
       val schema = Tables.schema(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_mvsink").resolve("out").toString
-      val ckpt = StreamingQueries.ckptScratchDir("graft_mvsink_ckpt")
       val keys = Seq("o_orderpriority", "order_year")
       val measures = Seq(MvSum("sum_cents", col("cents")),
         MvCount("n_orders"),
         MvBitmapDistinct("distinct_cust", col("o_custkey"), 1 << 21))
-      val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try StreamingOpsSinks.streamMvFoldToParquet(
-        s, dir, schema, out, ckpt, keys, measures)
-      finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
+      withScratchCheckpoint(StreamingOpsSinks.streamMvFoldToParquet(
+        s, dir, schema, out, _, keys, measures))
       StreamingOpsSinks.readMvFoldStore(s, out, keys, measures)
         .select(col("o_orderpriority"), col("order_year"),
           round(col("sum_cents").cast("double") / 100.0, 2).as("sum_price"),
@@ -2145,15 +2029,11 @@ object StreamingQueries {
       val schema = Tables.schema(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_hrmv").resolve("out").toString
-      val ckpt = StreamingQueries.ckptScratchDir("graft_hrmv_ckpt")
       val keys = Seq("leaf_key", "customer_id")
       val measures = Seq(MvSum("mv_sales", col("sales_amount")),
         MvSum("mv_qty", col("unit_quantity")), MvCount("mv_n"))
-      val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try StreamingOpsSinks.streamMvFoldToParquet(
-        s, dir, schema, out, ckpt, keys, measures)
-      finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
+      withScratchCheckpoint(StreamingOpsSinks.streamMvFoldToParquet(
+        s, dir, schema, out, _, keys, measures))
       graft.operators.HierarchyAgg.finalizeRollup(
         graft.operators.HierarchyAgg.rollupMvFromPairs(
           StreamingOpsSinks.readMvFoldStore(s, out, keys, measures), adim),
@@ -2176,15 +2056,11 @@ object StreamingQueries {
       val schema = Tables.schema(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_rtmv").resolve("out").toString
-      val ckpt = StreamingQueries.ckptScratchDir("graft_rtmv_ckpt")
       val keys = Seq("leaf_key", "customer_id")
       val measures = Seq(MvSum("mv_sales", col("sales_amount")),
         MvSum("mv_qty", col("unit_quantity")), MvCount("mv_n"))
-      val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try StreamingOpsSinks.streamMvFoldToParquet(
-        s, dir, schema, out, ckpt, keys, measures, weightCol = Some("w"))
-      finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
+      withScratchCheckpoint(StreamingOpsSinks.streamMvFoldToParquet(
+        s, dir, schema, out, _, keys, measures, weightCol = Some("w")))
       graft.operators.HierarchyAgg.finalizeRollup(
         graft.operators.HierarchyAgg.rollupMvFromPairs(
           StreamingOpsSinks.readMvFoldStore(s, out, keys, measures), adim),
@@ -2206,14 +2082,10 @@ object StreamingQueries {
       val schema = Tables.schema(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_histmv").resolve("out").toString
-      val ckpt = StreamingQueries.ckptScratchDir("graft_histmv_ckpt")
       val keys = Seq("o_orderpriority", "order_year")
       val (lo, hi, nb) = (0L, 1L << 26, 4096)
-      val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try StreamingOpsSinks.streamHistMvToParquet(
-        s, dir, schema, out, ckpt, keys, col("cents"), lo, hi, nb)
-      finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
+      withScratchCheckpoint(StreamingOpsSinks.streamHistMvToParquet(
+        s, dir, schema, out, _, keys, col("cents"), lo, hi, nb))
       StreamingOpsSinks.readHistMvStore(s, out, keys, Seq(50, 95),
         lo, hi, nb)
     }),
@@ -2231,15 +2103,11 @@ object StreamingQueries {
       val schema = Tables.schema(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_histrt").resolve("out").toString
-      val ckpt = StreamingQueries.ckptScratchDir("graft_histrt_ckpt")
       val keys = Seq("o_orderpriority", "order_year")
       val (lo, hi, nb) = (0L, 1L << 26, 4096)
-      val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try StreamingOpsSinks.streamHistMvToParquet(
-        s, dir, schema, out, ckpt, keys, col("cents"), lo, hi, nb,
-        weightCol = Some("w"))
-      finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
+      withScratchCheckpoint(StreamingOpsSinks.streamHistMvToParquet(
+        s, dir, schema, out, _, keys, col("cents"), lo, hi, nb,
+        weightCol = Some("w")))
       StreamingOpsSinks.readHistMvStore(s, out, keys, Seq(50, 95),
         lo, hi, nb)
     }),
@@ -2259,12 +2127,8 @@ object StreamingQueries {
       val schema = Tables.schema(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_nd_sink").resolve("out").toString
-      val ckpt = StreamingQueries.ckptScratchDir("graft_nd_ckpt")
-      val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try StreamingOpsSinks.streamNearDupToParquet(
-        s, corpus, dir, schema, out, ckpt, minJaccard = 0.05)
-      finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
+      withScratchCheckpoint(StreamingOpsSinks.streamNearDupToParquet(
+        s, corpus, dir, schema, out, _, minJaccard = 0.05))
       s.read.parquet(out)
         .select("doc_id", "status", "match_id", "match_jaccard")
     }),
@@ -2282,18 +2146,14 @@ object StreamingQueries {
       val schema = Tables.schema(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_sem_sink").resolve("out").toString
-      val ckpt = StreamingQueries.ckptScratchDir("graft_sem_ckpt")
-      val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
       // targetClusterSize pins the SINGLE-CLUSTER regime (autoK = 1)
       // at every gate SF BY CONFIGURATION, not by corpus-size
       // accident — the exact-oracle argument below requires it, and
       // sf0.1's 1600-vector corpus would otherwise tip to k = 2.
       // k > 1 blocking stays spec-covered in SimilaritySpec.
-      try StreamingOpsSinks.streamSemanticDedupToParquet(
-        s, corpusEmb, dir, schema, out, ckpt, tau = 0.9,
-        targetClusterSize = 100000)
-      finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
+      withScratchCheckpoint(StreamingOpsSinks.streamSemanticDedupToParquet(
+        s, corpusEmb, dir, schema, out, _, tau = 0.9,
+        targetClusterSize = 100000))
       s.read.parquet(out)
         .select("vec_id", "cluster_id", "status", "match_id", "match_cos")
     }),
@@ -2305,10 +2165,8 @@ object StreamingQueries {
     // joins emit on match → append mode.
     "st7_stream_stream_join" -> ((s, d) =>
       // a stream-stream join allocates FOUR state stores per shuffle
-      // partition (left/right × keyed/keyless); at bench scale the
-      // store setup dominates, so scope the join to 4 partitions —
-      // in production this knob is per-query state layout sizing
-      runStream(s, d, outputMode = "append", parts = 4) { ev =>
+      // partition (left/right × keyed/keyless): StatefulParts
+      runStream(s, d, outputMode = "append") { ev =>
         val clicks = ev.filter(col("event_type") === "click")
           .select(col("user_id"), col("event_id").as("click_id"),
             col("ts").as("click_ts"))
@@ -2334,7 +2192,7 @@ object StreamingQueries {
     // entry pins Spark's outer-emission semantics, not just the
     // join rows.
     "st24_stream_left_join" -> ((s, d) =>
-      runStream(s, d, outputMode = "append", parts = 4) { ev =>
+      runStream(s, d, outputMode = "append") { ev =>
         val clicks = ev.filter(col("event_type") === "click")
           .select(col("user_id"), col("event_id").as("click_id"),
             col("ts").as("click_ts"))

@@ -28,6 +28,24 @@ object GraftColumnBridge {
       plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A copy of `spark` sharing its context and shared state, with its
+    * own conf, temp views and streaming query manager. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** Unhook from the context's event bus the streaming listener bus
+    * that carries `marker`. Every session's streaming query manager
+    * hooks its own bus there for the life of the context; a session
+    * that ran its one stream has no further use for it. */
+  def unhookStreamBus(spark: SparkSession,
+      marker: streaming.StreamingQueryListener): Unit = {
+    val sc = spark.sparkContext
+    sc.listenerBus
+      .findListenersByClass[execution.streaming.runtime.StreamingQueryListenerBus]()
+      .filter(_.listeners.contains(marker))
+      .foreach(sc.removeSparkListener)
+  }
+
   /** Rebuild a materialized Dataset as a bare `LogicalRDD` with
     * DEFAULT statistics.
     *

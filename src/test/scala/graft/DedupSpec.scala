@@ -445,15 +445,13 @@ class DedupSpec extends SparkSpec {
       // BOTH execution paths must agree with the oracle: the adaptive
       // single-task union-find (default for small edge sets) and the
       // distributed star rounds (forced via a zero threshold)
-      Seq("2000000", "0").foreach { threshold =>
-        spark.conf.set("spark.graft.cc.localEdgeThreshold", threshold)
-        try {
-          val got = Dedup.connectedComponents(
-              ids.toDF("doc_id"), edges.toDF("doc_a", "doc_b"))
-            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-          assert(got == truth,
-            s"case $ci (threshold=$threshold): CC labels diverge from union-find")
-        } finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
+      Seq(2000000L, 0L).foreach { threshold =>
+        val got = Dedup.connectedComponentsLoop(
+            ids.toDF("doc_id"), edges.toDF("doc_a", "doc_b"),
+            "doc_id", "doc_a", "doc_b", maxIter = 30, threshold)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == truth,
+          s"case $ci (threshold=$threshold): CC labels diverge from union-find")
       }
     }
   }

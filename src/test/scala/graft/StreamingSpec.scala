@@ -573,6 +573,31 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("st3 and st12 leave no graft_stream_ view in the caller's catalog") {
+    val views = () => spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_")).toSet
+    val before = views()
+    Seq("st3_windowed_agg_stream", "st12_stream_histogram").foreach { name =>
+      val out = SparkEntry.queries(name)(spark, sf)
+      assert(out.count() > 0, s"$name returned no rows")
+    }
+    assert(views() == before, s"views left behind: ${views() -- before}")
+  }
+
+  test("st41 and st16 leave no scratch checkpoint behind") {
+    val root = graft.streaming.StreamingQueries.scratchRoot
+    val ckpts = () => {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.list(root).iterator().asScala.map(_.getFileName.toString)
+        .filter(_.matches("graft_.*_ckpt.*")).toSet
+    }
+    val before = ckpts()
+    Seq("st41_stream_hier_rollup", "st16_stream_histogram_sink").foreach { name =>
+      assert(SparkEntry.queries(name)(spark, sf).count() > 0, s"$name returned no rows")
+    }
+    assert(ckpts() -- before == Set.empty[String])
+  }
+
   test("streamToParquet: durable file sink with checkpoint equals the batch filter") {
     val dir = java.nio.file.Files.createTempDirectory("events_sink_src")
     java.nio.file.Files.createSymbolicLink(
