@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.GraftColumnBridge
 
@@ -20,16 +22,20 @@ import org.apache.spark.sql.GraftColumnBridge
   *     session cannot grow storage without limit; a released pin's
   *     consumers simply recompute.
   *
-  * [[releaseAll]] (behind `Graft.releasePins`) unpersists everything a
-  * session cached and forgets its memo entries, so the next read
-  * rebuilds and registers the artifact again. A leaf handed out before
-  * a release still reads correctly, but its `InMemoryRelation`
-  * re-materializes outside the registry: take artifacts from the
-  * registry again after a release rather than reusing old frames.
+  * [[sinkDir]] hands out output directories for the durable stream
+  * sinks, all under one per-session directory in the JVM tmpdir.
   *
-  * Sessions whose context stopped are swept on access (their blocks
-  * died with the context). At most `MaxSessions` (16) sessions are
-  * tracked: sessions sharing a live context (`newSession`) cannot be
+  * [[releaseAll]] (behind `Graft.releasePins`) unpersists everything a
+  * session cached, forgets its memo entries and deletes its sink
+  * directory, so the next read rebuilds and registers the artifact
+  * again. A leaf handed out before a release still reads correctly,
+  * but its `InMemoryRelation` re-materializes outside the registry:
+  * take artifacts from the registry again after a release rather than
+  * reusing old frames.
+  *
+  * Sessions whose context stopped are released on access (their blocks
+  * died with the context; their sink directories are deleted). At
+  * most `MaxSessions` (16) sessions are tracked: sessions sharing a live context (`newSession`) cannot be
   * swept, so past the bound the oldest is released outright.
   *
   * Concurrency: each session's state sits in one `Store`, guarded by
@@ -59,6 +65,7 @@ object Artifacts {
     var dead = false
     val pins = new java.util.ArrayDeque[Handle]()
     val memo = new java.util.HashMap[(String, Any), (Any, Option[Handle])]()
+    var sinks: Path = null
   }
 
   private val stores =
@@ -68,8 +75,7 @@ object Artifacts {
     new java.util.concurrent.ConcurrentLinkedQueue[SparkSession]()
 
   private def storeOf(spark: SparkSession): Store = {
-    stores.keySet.removeIf(_.sparkContext.isStopped)
-    order.removeIf(_.sparkContext.isStopped)
+    stores.keySet.forEach(s => if (s.sparkContext.isStopped) releaseAll(s))
     var full = !stores.containsKey(spark)
     while (full && stores.size >= MaxSessions) {
       val oldest = order.poll()
@@ -178,10 +184,40 @@ object Artifacts {
     if (h != null) h.free()
   }
 
-  /** Unpersist every pin and stored artifact of `spark` and forget its
-    * memo entries. Idempotent; frames already handed out stay usable
-    * (they recompute), and a later read rebuilds the artifact. Safe to
-    * race with builds and pins: each lands here or in a fresh store. */
+  /** A fresh, not yet existing `out` directory for a durable sink's
+    * output, under `spark`'s sink directory (made on first use in the
+    * JVM tmpdir). It lives until [[releaseAll]]: frames that read it
+    * must be read before `spark`'s artifacts are released. */
+  def sinkDir(spark: SparkSession, prefix: String): String = {
+    var out: String = null
+    while (out == null) {
+      val st = storeOf(spark)
+      out = st.synchronized {
+        if (st.dead) null
+        else {
+          if (st.sinks == null) st.sinks = Files.createTempDirectory("graft_sinks")
+          Files.createTempDirectory(st.sinks, prefix).resolve("out").toString
+        }
+      }
+    }
+    out
+  }
+
+  /** Delete `root` and everything under it, best effort. */
+  private[graft] def deleteTree(root: Path): Unit =
+    try {
+      val walk = Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally walk.close()
+    } catch { case scala.util.control.NonFatal(_) => () }
+
+  /** Unpersist every pin and stored artifact of `spark`, forget its
+    * memo entries and delete its sink directory. Idempotent; frames
+    * already handed out stay usable (they recompute) except those
+    * reading a deleted sink, and a later read rebuilds the artifact.
+    * Safe to race with builds, pins and sink directories: each lands
+    * here or in a fresh store. */
   def releaseAll(spark: SparkSession): Unit = {
     val st = stores.remove(spark)
     order.remove(spark)
@@ -193,6 +229,7 @@ object Artifacts {
       }
       st.pins.clear()
       st.memo.clear()
+      if (st.sinks != null) deleteTree(st.sinks)
     }
   }
 

@@ -218,8 +218,11 @@ object Graft {
   def lshBandsFor(targetJaccard: Double, k: Int = 16): Int =
     Dedup.lshBandsFor(targetJaccard, k)
 
-  /** Connected components over an arbitrary edge list — exact at any
-    * component diameter (alternating large-star/small-star rounds).
+  /** Connected components over an arbitrary edge list, each node
+    * labeled with the minimum id in its component — exact at any
+    * component diameter (single-task union-find up to 2M edges,
+    * alternating large-star/small-star rounds above; see
+    * [[operators.Dedup.connectedComponents]]).
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
       idCol: String = "doc_id", srcCol: String = "doc_a",
@@ -816,14 +819,6 @@ object Graft {
       centsCol: String, qtyCol: String, p0: Any, p1: Any): DataFrame =
     operators.Olap.priceVolumeMix(df, groupCol, periodCol, centsCol,
       qtyCol, p0, p1)
-
-  /** Graph connected components by pointer-jumping min-label
-    * propagation over an undirected edge list — the Graph-family
-    * twin of [[connectedComponents]]'s dedup-cluster variant
-    * (see [[operators.Graph.connectedComponents]]). */
-  def graphComponents(edges: DataFrame, rounds: Int = 6): DataFrame =
-    operators.Graph.connectedComponents(
-      operators.Graph.adjacency(edges), rounds)
 
   /** Per-(lang, source) character-distribution / entropy profile
     * (see [[operators.TextQueries.charEntropyProfile]]). */

@@ -745,8 +745,11 @@ object Dedup {
     *   session is untouched, and the returned frame is the caller's:
     *   its final join runs under the caller's settings.
     *
-    * This is the step that turns pairwise near-dup hits into dedup
-    * GROUPS (keep min doc_id per component, drop the rest).
+    * This is the engine's one connected-components implementation:
+    * it turns pairwise near-dup hits into dedup GROUPS (keep min
+    * doc_id per component, drop the rest) and labels g13's co-purchase
+    * graph. An edge set of at most 2,000,000 edges skips the rounds:
+    * one task solves it exactly by union-find (the same min-id labels).
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
       idCol: String = "doc_id", srcCol: String = "doc_a",

@@ -567,98 +567,4 @@ object Graph {
     oneHop.unionAll(twoHop).distinct()
       .groupBy("src").agg(count(lit(1)).as("reach"))
   }
-
-  /** CONNECTED COMPONENTS by min-label propagation WITH POINTER
-    * JUMPING, `rounds` synchronous rounds: every node starts labeled
-    * with its own id; each round it takes the minimum of its own
-    * label, its neighbors' labels, and its label's label (the
-    * Shiloach–Vishkin shortcut — labels are node ids, so a label can
-    * be dereferenced like a parent pointer). Plain neighbor-min needs
-    * diameter rounds; the label-of-label hop contracts label chains
-    * geometrically, so O(log n) rounds suffice on any topology — the
-    * difference between 6 shuffles and hundreds on a 100 TB edge
-    * list. Each round is one edge-sized join + node-grain min, plus
-    * one dim-sized label self-join. Fully integer/deterministic; the
-    * oracle unrolls the identical rounds.
-    *
-    * `verifyFixpoint` (default true — the library-safe setting) runs
-    * one extra probe round and fails loudly if any label still moves;
-    * callers that have proven the round count converges on their
-    * corpus (g13's spec does, for the gate corpus) may pass false and
-    * skip the probe's extra shuffle + count.
-    */
-  def connectedComponents(adj: DataFrame, rounds: Int = 6,
-      verifyFixpoint: Boolean = true): DataFrame = {
-    // One synchronous round: min over (own label, neighbor labels,
-    // label-of-label). The label frame feeds THREE consumers per
-    // round (itself, the neighbor min, the pointer jump); left
-    // un-truncated the logical plan triples per round (3^rounds
-    // analysis blow-up), so the loop cuts lineage with an eager
-    // node-grain checkpoint each round — the standard pattern for
-    // iterative graph algorithms.
-    def step(cur: DataFrame): DataFrame = {
-      val nb = adj
-        .join(cur.select(col("node").as("dst"), col("lbl").as("nl")), "dst")
-        .groupBy("src").agg(min("nl").as("nl"))
-        .select(col("src").as("node"), col("nl"))
-      val gp = cur.select(col("node").as("g_node"), col("lbl").as("gl"))
-      cur
-        .join(nb, Seq("node"), "left")
-        .join(gp, col("lbl") === col("g_node"))
-        .select(col("node"),
-          least(col("lbl"), coalesce(col("nl"), col("lbl")), col("gl"))
-            .as("lbl"))
-    }
-    var lbl = adj.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-    // CONVERGENCE EARLY EXIT (r22, the s13 beam-fixpoint pattern):
-    // every node's label is NON-INCREASING per round (the least()
-    // includes the node's own label), so Σ label is strictly
-    // decreasing until the fixpoint and an UNCHANGED sum proves the
-    // round moved no label at all — from there every further round is
-    // the identity, and stopping yields the bit-identical result of
-    // the full `rounds`-round unroll (the oracle's shape;
-    // GraphSpec pins early-exit ≡ fixed-round). The witness is one
-    // node-grain aggregate per round over the just-checkpointed frame
-    // (DECIMAL(38,0): node ids are unbounded longs at scale, the sum
-    // must not wrap). An observed identity round IS the fixpoint
-    // probe, so the verify pass is skipped whenever the exit fired.
-    // The witness job costs ~70 ms/round at bench scale, so it only
-    // runs over the LAST THREE budgeted rounds (pointer jumping is
-    // budgeted at O(log n) with slack; convergence before rounds-3
-    // would still exit after rounds-2, and witnessing the early
-    // rounds — which essentially always move — is pure overhead;
-    // measured: witness-every-round made g13 net-NEUTRAL, the saved
-    // round cancelled by 5 witness jobs).
-    val checkFrom = math.max(1, rounds - 2)
-    var prevSum: java.math.BigDecimal = null
-    var fixed = false
-    var r = 0
-    while (r < rounds && !fixed) {
-      lbl = step(lbl).localCheckpoint()
-      r += 1
-      if (r >= checkFrom) {
-        val s = lbl.agg(sum(col("lbl").cast("decimal(38,0)")).as("s"))
-          .head().getDecimal(0)
-        if (prevSum != null && prevSum.compareTo(s) == 0) fixed = true
-        prevSum = s
-      }
-    }
-    if (verifyFixpoint && !fixed) {
-      // A fixed round count is only correct if it REACHED the
-      // fixpoint — on a topology whose label chains outlast the
-      // pointer-jumping contraction the labels would silently split
-      // one true component into several. One extra node-grain round
-      // + an any-label-moved probe fails fast instead (d4's
-      // loud-guard convention).
-      val moved = step(lbl).withColumnRenamed("lbl", "lbl2")
-        .join(lbl, "node")
-        .filter(col("lbl2") =!= col("lbl")).limit(1).count()
-      require(moved == 0L,
-        s"connectedComponents: labels still moving after $rounds " +
-          "rounds — raise `rounds` (pointer jumping converges in " +
-          "O(log n), so one or two more usually suffice)")
-    }
-    lbl
-  }
 }

@@ -2,9 +2,6 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 
-import scala.jdk.CollectionConverters._
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.{DataFrame, Dataset, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1092,10 +1089,7 @@ object StreamingQueries {
   private def withScratchCheckpoint[T](f: String => T): T = {
     val ckpt = Files.createTempDirectory(scratchRoot, "graft_stream_ckpt")
     try f(ckpt.toString)
-    finally try {
-      Files.walk(ckpt).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
-    } catch { case NonFatal(_) => () }
+    finally graft.Artifacts.deleteTree(ckpt)
   }
 
   /** Start `writer` on `checkpoint` (a scratch one, deleted after the
@@ -1473,7 +1467,7 @@ object StreamingQueries {
     // oracle (st13's closed-window SQL) checks windowing, emission
     // and durability together.
     "st16_stream_histogram_sink" -> ((s, d) => {
-      val out = Files.createTempDirectory("graft_hist_sink").resolve("out").toString
+      val out = graft.Artifacts.sinkDir(s, "graft_hist_sink")
       driveEvents(s, d)(ev =>
         StreamingOpsSinks.parquetSink(StreamingOps.histogramStream(ev), out))
       s.read.parquet(out)
@@ -1999,8 +1993,7 @@ object StreamingQueries {
       import graft.operators.{MvSum, MvCount, MvBitmapDistinct}
       val dir = ordersMvStreamDir(s, d)
       val schema = Tables.schema(s, dir)
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_mvsink").resolve("out").toString
+      val out = graft.Artifacts.sinkDir(s, "graft_mvsink")
       val keys = Seq("o_orderpriority", "order_year")
       val measures = Seq(MvSum("sum_cents", col("cents")),
         MvCount("n_orders"),
@@ -2027,8 +2020,7 @@ object StreamingQueries {
       val adim = graft.operators.HierarchyQueries.dimension(s, d).aggregationDim
       val dir = mvStreamDir(s, d)
       val schema = Tables.schema(s, dir)
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_hrmv").resolve("out").toString
+      val out = graft.Artifacts.sinkDir(s, "graft_hrmv")
       val keys = Seq("leaf_key", "customer_id")
       val measures = Seq(MvSum("mv_sales", col("sales_amount")),
         MvSum("mv_qty", col("unit_quantity")), MvCount("mv_n"))
@@ -2054,8 +2046,7 @@ object StreamingQueries {
       val adim = graft.operators.HierarchyQueries.dimension(s, d).aggregationDim
       val dir = mvRetractStreamDir(s, d)
       val schema = Tables.schema(s, dir)
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_rtmv").resolve("out").toString
+      val out = graft.Artifacts.sinkDir(s, "graft_rtmv")
       val keys = Seq("leaf_key", "customer_id")
       val measures = Seq(MvSum("mv_sales", col("sales_amount")),
         MvSum("mv_qty", col("unit_quantity")), MvCount("mv_n"))
@@ -2080,8 +2071,7 @@ object StreamingQueries {
     "st40_stream_quantile_mv" -> ((s, d) => {
       val dir = ordersMvStreamDir(s, d)
       val schema = Tables.schema(s, dir)
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_histmv").resolve("out").toString
+      val out = graft.Artifacts.sinkDir(s, "graft_histmv")
       val keys = Seq("o_orderpriority", "order_year")
       val (lo, hi, nb) = (0L, 1L << 26, 4096)
       withScratchCheckpoint(StreamingOpsSinks.streamHistMvToParquet(
@@ -2101,8 +2091,7 @@ object StreamingQueries {
     "st43_stream_quantile_retraction" -> ((s, d) => {
       val dir = ordersRetractStreamDir(s, d)
       val schema = Tables.schema(s, dir)
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_histrt").resolve("out").toString
+      val out = graft.Artifacts.sinkDir(s, "graft_histrt")
       val keys = Seq("o_orderpriority", "order_year")
       val (lo, hi, nb) = (0L, 1L << 26, 4096)
       withScratchCheckpoint(StreamingOpsSinks.streamHistMvToParquet(
@@ -2125,8 +2114,7 @@ object StreamingQueries {
       val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
       val dir = ndStreamDir(s, d)
       val schema = Tables.schema(s, dir)
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_nd_sink").resolve("out").toString
+      val out = graft.Artifacts.sinkDir(s, "graft_nd_sink")
       withScratchCheckpoint(StreamingOpsSinks.streamNearDupToParquet(
         s, corpus, dir, schema, out, _, minJaccard = 0.05))
       s.read.parquet(out)
@@ -2144,8 +2132,7 @@ object StreamingQueries {
       val corpusEmb = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
       val dir = embStreamDir(s, d)
       val schema = Tables.schema(s, dir)
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_sem_sink").resolve("out").toString
+      val out = graft.Artifacts.sinkDir(s, "graft_sem_sink")
       // targetClusterSize pins the SINGLE-CLUSTER regime (autoK = 1)
       // at every gate SF BY CONFIGURATION, not by corpus-size
       // accident — the exact-oracle argument below requires it, and

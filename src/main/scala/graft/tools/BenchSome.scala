@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Time a SUBSET of registry queries in one session with the SAME
   * config + warm protocol as [[graft.Bench]] (sf0.001 warmup of the
   * named queries, shared-derivation pre-warm at the timed SF, 2 timed
@@ -19,16 +17,7 @@ object BenchSome {
     val names = args.toSeq
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus.toInt)
     val warmDir = "/root/testdata/sf0.001"
     names.foreach { n =>
       try graft.SparkEntry.queries(n)(spark, warmDir).queryExecution.toRdd.count()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Generator for the committed digest oracles of the lossy/float
   * codec entries (m8/m10/m11/m12/d20 — see
   * `MultimodalQueries.featureDigest`'s contract note). Runs each
@@ -21,13 +19,7 @@ object OracleDigests {
   def main(args: Array[String]): Unit = {
     val sfDirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     for (name <- TARGETS) {
       println(s"-- $name")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch profiler for per-round perf work (not part of the library):
   * times the queries named in `TARGETS` min-of-3 after a JVM/codegen
   * warmup at the smallest SF and the same cache pre-warm Bench uses.
@@ -18,16 +16,7 @@ object Prof {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus.toInt)
     val names = if (args.nonEmpty) args.toSeq else TARGETS
     names.foreach { n =>
       try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scratch SCALING-EVIDENCE generator (r22 verdict #5): the committed
@@ -23,11 +23,7 @@ object UpscaleData {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.drop(1).headOption.getOrElse("/tmp/graft_sfx10")
     val k = args.drop(2).headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
 
     // key columns to shift per table; every other column is copied
     val keyCols: Map[String, Seq[String]] = Map(

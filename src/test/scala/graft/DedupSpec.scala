@@ -426,7 +426,12 @@ class DedupSpec extends SparkSpec {
       // random sparse graph
       ((0L until 300L).toSeq,
         Seq.fill(150)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
-          .filter(p => p._1 != p._2))
+          .filter(p => p._1 != p._2)),
+      // planted: a triangle, a 5-node path (multi-hop label travel)
+      // and an isolated edge
+      (Seq(1L, 2L, 3L, 10L, 11L, 12L, 13L, 14L, 20L, 21L),
+        Seq((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L), (11L, 12L),
+          (12L, 13L), (13L, 14L), (20L, 21L)))
     )
     cases.zipWithIndex.foreach { case ((ids, edges), ci) =>
       // in-test union-find oracle
@@ -454,6 +459,18 @@ class DedupSpec extends SparkSpec {
           s"case $ci (threshold=$threshold): CC labels diverge from union-find")
       }
     }
+  }
+
+  test("connected components' star rounds fail loudly when maxIter is too small") {
+    // a 200-node chain with shuffled ids cannot converge in one round;
+    // labeling the unconverged edge set would split the component
+    val perm = new scala.util.Random(42).shuffle((0L until 200L).toVector)
+    val ex = intercept[IllegalStateException] {
+      Dedup.connectedComponentsLoop(perm.toDF("doc_id"),
+        perm.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("doc_a", "doc_b"),
+        "doc_id", "doc_a", "doc_b", maxIter = 1, localEdgeThreshold = 0L)
+    }
+    assert(ex.getMessage.contains("did not converge"))
   }
 
   test("embedding near-dup finds planted high-cosine pair on testdata") {

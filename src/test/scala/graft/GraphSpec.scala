@@ -340,59 +340,12 @@ class GraphSpec extends SparkSpec {
     assert(got === Map(1L -> 2L, 2L -> 3L, 3L -> 3L, 4L -> 2L))
   }
 
-  test("connectedComponents: planted components get their min ids") {
-    // triangle {1,2,3}, a 5-node path {10..14} (tests multi-hop
-    // label travel), and an isolated edge {20,21}
-    val e = edgesDF(Seq((1L, 2L, 1L), (1L, 3L, 1L), (2L, 3L, 1L),
-      (10L, 11L, 1L), (11L, 12L, 1L), (12L, 13L, 1L), (13L, 14L, 1L),
-      (20L, 21L, 1L)))
-    val got = Graph.connectedComponents(Graph.adjacency(e))
-      .as[(Long, Long)].collect().toMap
-    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L, 14L -> 10L,
-      20L -> 20L, 21L -> 20L))
-  }
-
-  test("connectedComponents: under-budgeted rounds fail loudly") {
-    // a 40-node path cannot converge in 1 round; the fixpoint guard
-    // must throw instead of returning silently split components
-    val path = edgesDF((1L until 40L).map(i => (i, i + 1, 1L)))
-    val ex = intercept[IllegalArgumentException] {
-      Graph.connectedComponents(Graph.adjacency(path), rounds = 1)
-    }
-    assert(ex.getMessage.contains("still moving"))
-    // with the guard off, the fixed-round semantics stand as-is
-    val loose = Graph.connectedComponents(Graph.adjacency(path),
-      rounds = 1, verifyFixpoint = false)
-    assert(loose.count() === 40L)
-  }
-
-  test("connectedComponents: round 6 is the fixpoint on every probe-skipped corpus") {
-    // the registry runs 6 pointer-jumping rounds with the runtime
-    // probe off exactly on GraphQueries.fixpointProvenDirs, so THIS
-    // test is the only convergence check left for those dirs — it
-    // iterates the SAME set the registry consults (gate SFs + the
-    // bench sf0.1), so a dir added to the skip set without a proof
-    // here fails the suite: a 7th round changing nothing proves the
-    // fixed-round labels ARE the true components
-    for (sfDir <- graft.operators.GraphQueries.fixpointProvenDirs.toSeq.sorted) {
-      val adj = graft.operators.GraphQueries.cachedAdjDeg(spark, sfDir)
-      // the probe round IS the proof (it fails loudly if any label
-      // still moves after round 6) — one probed run, not two full
-      // unrolls diffed against each other
-      val r6 = Graph.connectedComponents(adj, 6, verifyFixpoint = true)
-      assert(r6.limit(1).count() === 1L, s"no labels at $sfDir")
-    }
-  }
-
-  test("connectedComponents: convergence early-exit ≡ fixed-round unroll (r22)") {
-    // r22 added the Σ-label fixpoint witness (labels are per-node
-    // non-increasing, so an unchanged sum proves an identity round)
-    // with early exit. This spec replays the pre-r22 fixed-count loop
-    // VERBATIM and pins row-identity on (a) the gate corpus, where the
-    // exit fires before round 6, and (b) a 40-node path under an
-    // exactly-sufficient budget, where it must NOT fire early in a
-    // way that splits components.
+  test("g13 components equal the oracle's 6-round pointer-jumping unroll at every SF") {
+    // g13 runs Dedup's adaptive connected components; its DuckDB
+    // oracle unrolls 6 synchronous min-label rounds with pointer
+    // jumping. This replays those rounds VERBATIM in Spark and pins
+    // row-identity on every testdata corpus: 6 rounds reach the true
+    // (min-id) components there, so both read the same labels.
     def oldUnroll(adj: org.apache.spark.sql.DataFrame, rounds: Int)
         : org.apache.spark.sql.DataFrame = {
       def step(cur: org.apache.spark.sql.DataFrame) = {
@@ -413,21 +366,16 @@ class GraphSpec extends SparkSpec {
       for (_ <- 1 to rounds) lbl = step(lbl).localCheckpoint()
       lbl
     }
-    val adj = graft.operators.GraphQueries
-      .cachedAdjDeg(spark, "/root/testdata/sf0.001")
-    val got = Graph.connectedComponents(adj, 6, verifyFixpoint = false)
-      .as[(Long, Long)].collect().toMap
-    val want = oldUnroll(adj, 6).as[(Long, Long)].collect().toMap
-    assert(got === want,
-      "early-exit components must equal the fixed 6-round unroll")
-    // a 40-node path needs every pointer-jumping round of a budget
-    // sized to its diameter: the witness must not cut the loop short
-    val path = Graph.adjacency(edgesDF((1L until 40L).map(i => (i, i + 1, 1L))))
-    val gotPath = Graph.connectedComponents(path, rounds = 7)
-      .as[(Long, Long)].collect().toMap
-    val wantPath = oldUnroll(path, 7).as[(Long, Long)].collect().toMap
-    assert(gotPath === wantPath)
-    assert(gotPath.values.toSet === Set(1L), "one component, min-id label")
+    val sfDirs = Seq("sf0.001", "sf0.01", "sf0.1")
+      .map(java.nio.file.Paths.get(sf).resolveSibling(_).toString)
+    for (sfDir <- sfDirs) {
+      val got = graft.operators.GraphQueries.components(spark, sfDir)
+        .as[(Long, Long)].collect().toMap
+      val adj = graft.operators.GraphQueries.cachedAdjDeg(spark, sfDir)
+      val want = oldUnroll(adj, 6).as[(Long, Long)].collect().toMap
+      assert(got.nonEmpty, s"no labels at $sfDir")
+      assert(got === want, s"g13 components differ from the 6-round unroll at $sfDir")
+    }
   }
 
   test("landmarkDistances: a path graph reads hand-computed per-landmark hops and closeness") {

@@ -598,6 +598,26 @@ class StreamingSpec extends SparkSpec {
     assert(ckpts() -- before == Set.empty[String])
   }
 
+  test("releasePins deletes the sink directories st41 and st16 wrote") {
+    val s = spark.newSession()
+    // each sink writes under a fresh `.../<prefix>NNN/out`; find it
+    // from the files the returned frame reads
+    val outs = Seq("st41_stream_hier_rollup", "st16_stream_histogram_sink").flatMap { name =>
+      val df = SparkEntry.queries(name)(s, sf)
+      assert(df.count() > 0, s"$name returned no rows")
+      df.inputFiles.toSeq.flatMap { f =>
+        Iterator.iterate(java.nio.file.Paths.get(new java.net.URI(f)))(_.getParent)
+          .takeWhile(_ != null)
+          .find(p => p.getFileName != null && p.getFileName.toString == "out")
+      }.distinct
+    }
+    assert(outs.size == 2, s"sink dirs found: $outs")
+    assert(outs.forall(java.nio.file.Files.isDirectory(_)))
+    Graft.releasePins(s)
+    val left = outs.map(_.getParent).filter(java.nio.file.Files.exists(_))
+    assert(left.isEmpty, s"sink directories left after releasePins: $left")
+  }
+
   test("streamToParquet: durable file sink with checkpoint equals the batch filter") {
     val dir = java.nio.file.Files.createTempDirectory("events_sink_src")
     java.nio.file.Files.createSymbolicLink(
