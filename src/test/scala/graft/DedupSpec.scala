@@ -426,12 +426,7 @@ class DedupSpec extends SparkSpec {
       // random sparse graph
       ((0L until 300L).toSeq,
         Seq.fill(150)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
-          .filter(p => p._1 != p._2)),
-      // planted: a triangle, a 5-node path (multi-hop label travel)
-      // and an isolated edge
-      (Seq(1L, 2L, 3L, 10L, 11L, 12L, 13L, 14L, 20L, 21L),
-        Seq((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L), (11L, 12L),
-          (12L, 13L), (13L, 14L), (20L, 21L)))
+          .filter(p => p._1 != p._2))
     )
     cases.zipWithIndex.foreach { case ((ids, edges), ci) =>
       // in-test union-find oracle

@@ -340,42 +340,99 @@ class GraphSpec extends SparkSpec {
     assert(got === Map(1L -> 2L, 2L -> 3L, 3L -> 3L, 4L -> 2L))
   }
 
-  test("g13 components equal the oracle's 6-round pointer-jumping unroll at every SF") {
-    // g13 runs Dedup's adaptive connected components; its DuckDB
-    // oracle unrolls 6 synchronous min-label rounds with pointer
-    // jumping. This replays those rounds VERBATIM in Spark and pins
-    // row-identity on every testdata corpus: 6 rounds reach the true
-    // (min-id) components there, so both read the same labels.
-    def oldUnroll(adj: org.apache.spark.sql.DataFrame, rounds: Int)
-        : org.apache.spark.sql.DataFrame = {
-      def step(cur: org.apache.spark.sql.DataFrame) = {
-        val nb = adj
-          .join(cur.select(col("node").as("dst"), col("lbl").as("nl")), "dst")
-          .groupBy("src").agg(min("nl").as("nl"))
-          .select(col("src").as("node"), col("nl"))
-        val gp = cur.select(col("node").as("g_node"), col("lbl").as("gl"))
-        cur
-          .join(nb, Seq("node"), "left")
-          .join(gp, col("lbl") === col("g_node"))
-          .select(col("node"),
-            least(col("lbl"), coalesce(col("nl"), col("lbl")), col("gl"))
-              .as("lbl"))
-      }
-      var lbl = adj.select(col("src").as("node")).distinct()
-        .withColumn("lbl", col("node"))
-      for (_ <- 1 to rounds) lbl = step(lbl).localCheckpoint()
-      lbl
+  test("connectedComponents: planted components get their min ids") {
+    // triangle {1,2,3}, a 5-node path {10..14} (tests multi-hop
+    // label travel), and an isolated edge {20,21} — on both of
+    // Dedup.connectedComponentsLoop's paths: the single-task
+    // union-find (default threshold) and the star rounds (forced)
+    val e = edgesDF(Seq((1L, 2L, 1L), (1L, 3L, 1L), (2L, 3L, 1L),
+      (10L, 11L, 1L), (11L, 12L, 1L), (12L, 13L, 1L), (13L, 14L, 1L),
+      (20L, 21L, 1L)))
+    val nodes = Graph.adjacency(e).select(col("src").as("node")).distinct()
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
+      10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L, 14L -> 10L,
+      20L -> 20L, 21L -> 20L)
+    Seq(2000000L, 0L).foreach { threshold =>
+      val got = graft.operators.Dedup.connectedComponentsLoop(nodes, e,
+          "node", "a", "b", maxIter = 30, threshold)
+        .as[(Long, Long)].collect().toMap
+      assert(got === want, s"threshold=$threshold")
     }
-    val sfDirs = Seq("sf0.001", "sf0.01", "sf0.1")
-      .map(java.nio.file.Paths.get(sf).resolveSibling(_).toString)
-    for (sfDir <- sfDirs) {
+  }
+
+  /** The DuckDB oracle's g13 recurrence replayed VERBATIM: per round,
+    * min over (own label, neighbor labels, label-of-label). */
+  private def ccStep(adj: org.apache.spark.sql.DataFrame,
+      cur: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val nb = adj
+      .join(cur.select(col("node").as("dst"), col("lbl").as("nl")), "dst")
+      .groupBy("src").agg(min("nl").as("nl"))
+      .select(col("src").as("node"), col("nl"))
+    val gp = cur.select(col("node").as("g_node"), col("lbl").as("gl"))
+    cur
+      .join(nb, Seq("node"), "left")
+      .join(gp, col("lbl") === col("g_node"))
+      .select(col("node"),
+        least(col("lbl"), coalesce(col("nl"), col("lbl")), col("gl"))
+          .as("lbl"))
+  }
+
+  private def oldUnroll(adj: org.apache.spark.sql.DataFrame, rounds: Int)
+      : org.apache.spark.sql.DataFrame = {
+    var lbl = adj.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node"))
+    for (_ <- 1 to rounds) lbl = ccStep(adj, lbl).localCheckpoint()
+    lbl
+  }
+
+  /** Every testdata corpus g13 is gated or benchmarked on. */
+  private def corpusDirs: Seq[String] = Seq("sf0.001", "sf0.01", "sf0.1")
+    .map(java.nio.file.Paths.get(sf).resolveSibling(_).toString)
+
+  /** The oracle's 6-round labels per corpus, computed once for the two
+    * tests below. */
+  private lazy val oracleR6: Map[String, org.apache.spark.sql.DataFrame] =
+    corpusDirs.map { d =>
+      d -> oldUnroll(graft.operators.GraphQueries.cachedAdjDeg(spark, d), 6)
+    }.toMap
+
+  test("connectedComponents: round 6 is the fixpoint on every probe-skipped corpus") {
+    // g13's oracle stops after 6 rounds with no convergence probe, so
+    // its labels are the true components only where round 6 is already
+    // the min-label fixpoint: a 7th round changing nothing proves it on
+    // every corpus the oracle runs on
+    for (sfDir <- corpusDirs) {
+      val adj = graft.operators.GraphQueries.cachedAdjDeg(spark, sfDir)
+      val r6 = oracleR6(sfDir).as[(Long, Long)].collect().toMap
+      val r7 = ccStep(adj, oracleR6(sfDir)).as[(Long, Long)].collect().toMap
+      assert(r6.nonEmpty, s"no labels at $sfDir")
+      assert(r7 === r6, s"a 7th round still moves labels at $sfDir")
+    }
+  }
+
+  test("connectedComponents: convergence early-exit ≡ fixed-round unroll (r22)") {
+    // g13 runs Dedup's connected components, which stop as soon as the
+    // labels converge; the oracle unrolls a fixed 6 rounds. Row-identity
+    // on (a) every corpus and (b) a 40-node path under an
+    // exactly-sufficient 7-round unroll, where stopping early would
+    // split the component.
+    for (sfDir <- corpusDirs) {
       val got = graft.operators.GraphQueries.components(spark, sfDir)
         .as[(Long, Long)].collect().toMap
-      val adj = graft.operators.GraphQueries.cachedAdjDeg(spark, sfDir)
-      val want = oldUnroll(adj, 6).as[(Long, Long)].collect().toMap
-      assert(got.nonEmpty, s"no labels at $sfDir")
+      val want = oracleR6(sfDir).as[(Long, Long)].collect().toMap
       assert(got === want, s"g13 components differ from the 6-round unroll at $sfDir")
     }
+    val pathE = edgesDF((1L until 40L).map(i => (i, i + 1, 1L)))
+    val path = Graph.adjacency(pathE)
+    val wantPath = oldUnroll(path, 7).as[(Long, Long)].collect().toMap
+    Seq(2000000L, 0L).foreach { threshold =>
+      val gotPath = graft.operators.Dedup.connectedComponentsLoop(
+          path.select(col("src").as("node")).distinct(), pathE,
+          "node", "a", "b", maxIter = 30, threshold)
+        .as[(Long, Long)].collect().toMap
+      assert(gotPath === wantPath, s"threshold=$threshold")
+    }
+    assert(wantPath.values.toSet === Set(1L), "one component, min-id label")
   }
 
   test("landmarkDistances: a path graph reads hand-computed per-landmark hops and closeness") {
