@@ -22,11 +22,12 @@ import org.apache.spark.sql.GraftColumnBridge
   *     session cannot grow storage without limit; a released pin's
   *     consumers simply recompute.
   *
-  * [[sinkDir]] hands out output directories for the durable stream
-  * sinks, all under one per-session directory in the JVM tmpdir.
+  * [[sessionDir]] hands out directories for the durable stream
+  * sinks' output and the stream source fixtures, all under one
+  * per-session directory in the JVM tmpdir.
   *
   * [[releaseAll]] (behind `Graft.releasePins`) unpersists everything a
-  * session cached, forgets its memo entries and deletes its sink
+  * session cached, forgets its memo entries and deletes its session
   * directory, so the next read rebuilds and registers the artifact
   * again. A leaf handed out before a release still reads correctly,
   * but its `InMemoryRelation` re-materializes outside the registry:
@@ -34,7 +35,8 @@ import org.apache.spark.sql.GraftColumnBridge
   * reusing old frames.
   *
   * Sessions whose context stopped are released on access (their blocks
-  * died with the context; their sink directories are deleted). At
+  * died with the context; their session directories are deleted), and
+  * the JVM's exit deletes every session directory still live. At
   * most `MaxSessions` (16) sessions are tracked: sessions sharing a live context (`newSession`) cannot be
   * swept, so past the bound the oldest is released outright.
   *
@@ -65,11 +67,17 @@ object Artifacts {
     var dead = false
     val pins = new java.util.ArrayDeque[Handle]()
     val memo = new java.util.HashMap[(String, Any), (Any, Option[Handle])]()
-    var sinks: Path = null
+    @volatile var dir: Path = null
   }
 
   private val stores =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, Store]()
+  // a JVM that exits without releasing a session still deletes its
+  // session directory (fixtures and sink output alike)
+  sys.addShutdownHook(stores.values.forEach { st =>
+    val dir = st.dir
+    if (dir != null) deleteTree(dir)
+  })
   // store creation order, for the session bound
   private val order =
     new java.util.concurrent.ConcurrentLinkedQueue[SparkSession]()
@@ -184,19 +192,20 @@ object Artifacts {
     if (h != null) h.free()
   }
 
-  /** A fresh, not yet existing `out` directory for a durable sink's
-    * output, under `spark`'s sink directory (made on first use in the
-    * JVM tmpdir). It lives until [[releaseAll]]: frames that read it
-    * must be read before `spark`'s artifacts are released. */
-  def sinkDir(spark: SparkSession, prefix: String): String = {
+  /** A fresh, not yet existing `out` directory — a durable sink's
+    * output or a stream fixture's files — under `spark`'s session
+    * directory (made on first use in the JVM tmpdir). It lives until
+    * [[releaseAll]]: frames that read it must be read before `spark`'s
+    * artifacts are released. */
+  def sessionDir(spark: SparkSession, prefix: String): String = {
     var out: String = null
     while (out == null) {
       val st = storeOf(spark)
       out = st.synchronized {
         if (st.dead) null
         else {
-          if (st.sinks == null) st.sinks = Files.createTempDirectory("graft_sinks")
-          Files.createTempDirectory(st.sinks, prefix).resolve("out").toString
+          if (st.dir == null) st.dir = Files.createTempDirectory("graft_session")
+          Files.createTempDirectory(st.dir, prefix).resolve("out").toString
         }
       }
     }
@@ -213,11 +222,11 @@ object Artifacts {
     } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Unpersist every pin and stored artifact of `spark`, forget its
-    * memo entries and delete its sink directory. Idempotent; frames
+    * memo entries and delete its session directory. Idempotent; frames
     * already handed out stay usable (they recompute) except those
-    * reading a deleted sink, and a later read rebuilds the artifact.
-    * Safe to race with builds, pins and sink directories: each lands
-    * here or in a fresh store. */
+    * reading a deleted session directory, and a later read rebuilds
+    * the artifact. Safe to race with builds, pins and session
+    * directories: each lands here or in a fresh store. */
   def releaseAll(spark: SparkSession): Unit = {
     val st = stores.remove(spark)
     order.remove(spark)
@@ -229,7 +238,7 @@ object Artifacts {
       }
       st.pins.clear()
       st.memo.clear()
-      if (st.sinks != null) deleteTree(st.sinks)
+      if (st.dir != null) deleteTree(st.dir)
     }
   }
 

@@ -70,14 +70,7 @@ object Bench {
     // build with no marker in the results.
     val warmT0 = System.nanoTime()
     val warmOk =
-      try {
-        graft.operators.HierarchyQueries.warmDims(spark, sfDir)
-        graft.operators.DedupQueries.warmComponents(spark, sfDir)
-        graft.operators.SimilarityQueries.warmGraph(spark, sfDir)
-        graft.streaming.StreamingQueries.warmFixtures(spark, sfDir)
-        graft.operators.GraphQueries.warmEdges(spark, sfDir)
-        true
-      } catch { case e: Throwable =>
+      try { SparkEntry.warmArtifacts(spark, sfDir); true } catch { case e: Throwable =>
         System.err.println(s"[bench] cache pre-warm skipped: ${e.getMessage}")
         false }
     val warmSec = (System.nanoTime() - warmT0) / 1e9

@@ -111,7 +111,7 @@ object Graft {
     HierarchyDimension.asOfRange(versionedNodes, start, end, validFrom, validTo)
 
   /** Validity-tagged closure union of an SCD2-versioned hierarchy —
-    * the broadcast side of a history-correct rollup (each fact routes
+    * the dimension side of a history-correct rollup (each fact routes
     * through the tree version live at its own date); see
     * [[operators.HierarchyDimension.historyClosure]].
     */
@@ -127,10 +127,9 @@ object Graft {
     */
   def historyRollup(facts: DataFrame, closures: DataFrame,
       leafIdCol: String, dateCol: String,
-      validFrom: String = "valid_from", validTo: String = "valid_to",
-      broadcastDim: Boolean = true): DataFrame =
+      validFrom: String = "valid_from", validTo: String = "valid_to"): DataFrame =
     HierarchyAgg.historyRollup(facts, closures, leafIdCol, dateCol,
-      validFrom, validTo, broadcastDim)
+      validFrom, validTo)
 
   /** Targeted MV repair after a hierarchy edit: recompute ONLY the
     * ancestors [[hierarchyDiff]] invalidates, keep every other row of

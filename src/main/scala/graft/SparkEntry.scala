@@ -20,6 +20,21 @@ object SparkEntry {
       Profile.queries ++ Packing.queries ++ RetrievalQueries.queries ++
       GraphQueries.queries
 
+  /** Build every shared artifact the registry reads at `sfDir` — the
+    * hierarchy dims and MVs, dedup components, the similarity graph,
+    * the stream fixtures and the graph edges — so a timed entry pays
+    * for its query, not for a one-time build that other entries read
+    * for free. The one pre-warm list: `Bench` and the dev mains that
+    * claim its protocol all call this.
+    */
+  def warmArtifacts(spark: SparkSession, sfDir: String): Unit = {
+    HierarchyQueries.warmDims(spark, sfDir)
+    DedupQueries.warmComponents(spark, sfDir)
+    SimilarityQueries.warmGraph(spark, sfDir)
+    graft.streaming.StreamingQueries.warmFixtures(spark, sfDir)
+    GraphQueries.warmEdges(spark, sfDir)
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -26,7 +26,8 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
   * `explode` — a narrow, shuffle-free pass.
   *
   * Scale: all derivations happen on the dim side; fact-side queries
-  * broadcast the result (see [[HierarchyAgg]]). The only global
+  * join the closure with the strategy the dimension picks (see
+  * [[aggregationDim]]). The only global
   * operation is the DFS `node_sort_order` row_number, again dim-sized.
   *
   * @param nodes       parent-child node table; one row per node
@@ -572,7 +573,9 @@ class HierarchyDimension(
       .dataFrameFromInternalRows(spark, outSchema, rdd)
   }
 
-  lazy val aggregationDim: DataFrame =
+  /** The closure without a join hint, for the dimension's own
+    * derivations ([[nestedSets]]). */
+  private lazy val closure: DataFrame =
     // fusedClosure buffers the dim in ONE partition — only valid on the
     // single-task path; the distributed dim uses the explode+join shape
     // with a plain shuffle join (a >maxNodes ancestor side must not
@@ -580,6 +583,20 @@ class HierarchyDimension(
     if (useDistributedLeveling) closureViaJoin(broadcastAncestors = false)
     else if (fusedSortable) fusedClosure
     else closureViaJoin(broadcastAncestors = true)
+
+  /** The closure as fact-side operators join it, with the join
+    * strategy the dimension picks from its size: a broadcast hint when
+    * it was leveled in one task (at most `maxNodes` nodes), none on the
+    * distributed path, where Spark's statistics choose. The hint flows
+    * through `filter`/`select`/aggregates to the join reading the
+    * frame; an outer `.hint("merge")` overrides it.
+    */
+  lazy val aggregationDim: DataFrame = joinSide(closure)
+
+  /** `df`, derived from this dimension through a join (which stops
+    * the hint), with the join strategy of [[aggregationDim]]. */
+  def joinSide(df: DataFrame): DataFrame =
+    if (useDistributedLeveling) df else broadcast(df)
 
   private def closureViaJoin(broadcastAncestors: Boolean): DataFrame = {
     val rd = reportingDim
@@ -608,7 +625,7 @@ class HierarchyDimension(
     * Everything here is dim-sized; the closure count broadcasts.
     */
   lazy val nestedSets: DataFrame = {
-    val sizes = aggregationDim
+    val sizes = closure
       .groupBy(col("ancestor_node_id").as("node_id"))
       .agg(count(lit(1)).as("subtree_size"))
     val lftCol = col("node_sort_order") * 2 - col("level_number")

@@ -133,8 +133,9 @@ object HierarchyAgg {
     *    shuffle of the giant side, with map-side partial aggregation
     *    collapsing it to the distinct-pair cardinality. This is the
     *    only point where 100 TB of rows move.
-    * 2. the closure join is broadcast (dim-sized), so the pre-agg
-    *    stream expands ×depth without shuffling.
+    * 2. the closure join takes the dimension's strategy (broadcast for
+    *    any dimension leveled in one task), so the pre-agg stream
+    *    expands ×depth without shuffling.
     * 3. the ancestor groupBy (|nodes| cardinality keys) computes the
     *    sums/counts additively from the pre-agg partials and the exact
     *    `countDistinct(customer_id)` over distinct pairs — the Expand
@@ -143,21 +144,17 @@ object HierarchyAgg {
     * 4. string labels join onto the nodes-sized aggregate on the
     *    numeric sort order — the expanded stream never hashes strings.
     */
-  /** Dim-side join strategy: the closure/label frames are broadcast by
-    * default — correct for any dimension that fits an executor (the
-    * normal case; even 20 k leaves ⇒ ~60 k closure rows). For
-    * PATHOLOGICALLY wide hierarchies (closure beyond broadcast limits)
-    * pass `broadcastDim = false`: the joins fall back to the
-    * optimizer's shuffle strategy instead of forcing a driver-side
-    * build that would OOM. Results are identical (spec-asserted).
+  /** Dim-side join strategy: every operator here joins the closure
+    * and its label frame exactly as it receives them.
+    * [[HierarchyDimension.aggregationDim]] carries the strategy — a
+    * broadcast hint for a dimension leveled in one task, none for a
+    * distributed one; a loaded or stored closure is sized by Spark's
+    * statistics; `.hint("merge")` on the closure forces the shuffle
+    * path. Results are identical either way (spec-asserted).
     */
-  private def maybeBroadcast(df: DataFrame, broadcastDim: Boolean): DataFrame =
-    if (broadcastDim) broadcast(df) else df
-
   def hierarchicalRollup(facts: DataFrame, aggDim: DataFrame,
       factKey: String = "leaf_key",
-      approxDistinct: Boolean = false,
-      broadcastDim: Boolean = true): DataFrame = {
+      approxDistinct: Boolean = false): DataFrame = {
     // exact distinct is the reference's semantics (and the registry/
     // oracle form), computed as an EXPLICIT two-level aggregation via
     // the MV grain: level 1 groups by (node, customer) — partial
@@ -167,25 +164,21 @@ object HierarchyAgg {
     // cost). The approx mode (HLL++, mergeable) is the opt-in for
     // profiling-grade rollups.
     if (!approxDistinct)
-      return finalizeRollup(
-        rollupMv(facts, aggDim, factKey, broadcastDim = broadcastDim),
-        aggDim, broadcastDim)
+      return finalizeRollup(rollupMv(facts, aggDim, factKey), aggDim)
     val pairAgg = facts
       .groupBy(col(factKey), col("customer_id"))
       .agg(
         sum(col("sales_amount")).as("__sales"),
         sum(col("unit_quantity")).as("__qty"),
         count(lit(1)).as("__n"))
-    val expanded = pairAgg
-      .join(maybeBroadcast(closureKeys(aggDim), broadcastDim),
-        col(factKey) === col("descendant_node_natural_key"))
-    val aggregated = expanded.groupBy("ancestor_node_sort_order")
+    val aggregated = expand(pairAgg, aggDim, factKey)
+      .groupBy("ancestor_node_sort_order")
       .agg(
         round(sum(col("__sales")), 2).as("sum_sales_amount"),
         round(sum(col("__qty")), 2).as("sum_unit_quantity"),
         approx_count_distinct(col("customer_id")).as("distinct_customer_count"),
         sum(col("__n")).as("count_of_fact_records"))
-    withLabels(aggregated, aggDim, broadcastDim)
+    withLabels(aggregated, aggDim)
   }
 
   /** The THIRD distinct mode of the rollup: EXACT distinct customers
@@ -202,12 +195,9 @@ object HierarchyAgg {
     * against h4's own oracle SQL.
     */
   def hierarchicalRollupBitmap(facts: DataFrame, aggDim: DataFrame,
-      maxCustomer: Int, factKey: String = "leaf_key",
-      broadcastDim: Boolean = true): DataFrame = {
-    val expanded = facts
-      .join(maybeBroadcast(closureKeys(aggDim), broadcastDim),
-        col(factKey) === col("descendant_node_natural_key"))
-    val aggregated = expanded.groupBy("ancestor_node_sort_order")
+      maxCustomer: Int, factKey: String = "leaf_key"): DataFrame = {
+    val aggregated = expand(facts, aggDim, factKey)
+      .groupBy("ancestor_node_sort_order")
       .agg(
         round(sum(col("sales_amount")), 2).as("sum_sales_amount"),
         round(sum(col("unit_quantity")), 2).as("sum_unit_quantity"),
@@ -215,7 +205,7 @@ object HierarchyAgg {
           .bitmapDistinct(col("customer_id"), maxCustomer)
           .as("distinct_customer_count"),
         count(lit(1)).as("count_of_fact_records"))
-    withLabels(aggregated, aggDim, broadcastDim)
+    withLabels(aggregated, aggDim)
   }
 
   /** INCREMENTAL EXACT DISTINCT via a stored bitmap MV — the
@@ -232,10 +222,8 @@ object HierarchyAgg {
     * dominates at 100 TB).
     */
   def distinctMv(facts: DataFrame, aggDim: DataFrame, maxCustomer: Int,
-      factKey: String = "leaf_key", broadcastDim: Boolean = true): DataFrame =
-    facts
-      .join(maybeBroadcast(closureKeys(aggDim), broadcastDim),
-        col(factKey) === col("descendant_node_natural_key"))
+      factKey: String = "leaf_key"): DataFrame =
+    expand(facts, aggDim, factKey)
       .groupBy("ancestor_node_sort_order")
       .agg(graft.functions.BitmapDistinctAggregate
         .bitmapBuild(col("customer_id"), maxCustomer).as("customer_bitmap"))
@@ -243,10 +231,8 @@ object HierarchyAgg {
   /** Fold a delta batch into a stored distinct MV: build the delta's
     * node-grain bitmaps, union with the store, OR-merge per node. */
   def mergeDistinctMv(mv: DataFrame, deltaFacts: DataFrame, aggDim: DataFrame,
-      maxCustomer: Int, factKey: String = "leaf_key",
-      broadcastDim: Boolean = true): DataFrame =
-    mv.unionByName(
-        distinctMv(deltaFacts, aggDim, maxCustomer, factKey, broadcastDim))
+      maxCustomer: Int, factKey: String = "leaf_key"): DataFrame =
+    mv.unionByName(distinctMv(deltaFacts, aggDim, maxCustomer, factKey))
       .groupBy("ancestor_node_sort_order")
       .agg(graft.functions.BitmapDistinctAggregate
         .bitmapMerge(col("customer_bitmap"), maxCustomer).as("customer_bitmap"))
@@ -263,6 +249,34 @@ object HierarchyAgg {
       col("descendant_node_natural_key"),
       col("ancestor_node_sort_order"))
 
+  /** The rollup's fact-side join: each `facts` row × every ancestor of
+    * its `factKey` leaf, with the closure's own join strategy. */
+  private def expand(facts: DataFrame, aggDim: DataFrame,
+      factKey: String): DataFrame =
+    facts.join(closureKeys(aggDim),
+      col(factKey) === col("descendant_node_natural_key"))
+
+  /** `agg` (keyed by ancestor_node_sort_order) with each node's
+    * `lpad`-indented name, and with its level name when `withLevel`.
+    * CONTRACT: aggDim must come from HierarchyDimension.aggregationDim
+    * (or satisfy the same invariant): ancestor_node_sort_order is a
+    * non-null row_number, unique per node, so it functionally
+    * determines the label pair. The closure's self-pairs
+    * (net_level = 0) are exactly one row per node — labels need no
+    * distinct() shuffle.
+    */
+  private def labeled(agg: DataFrame, aggDim: DataFrame,
+      withLevel: Boolean = false): DataFrame = {
+    val indent = expr("lpad('-', (ancestor_level_number - 1) * 7, '-')")
+    val labels = aggDim.filter(col("net_level") === 0).select(
+      Seq(col("ancestor_node_sort_order"),
+        concat(indent, col("ancestor_node_name")).as("product_node_name")) ++
+        (if (withLevel)
+          Seq(concat(indent, col("ancestor_level_name")).as("product_level_name"))
+        else Nil): _*)
+    agg.join(labels, Seq("ancestor_node_sort_order"))
+  }
+
   /** HIERARCHY × FLAT-ATTRIBUTE CUBE (round 19): every hierarchy node
     * crossed with a flat dimension attribute — the drill-ACROSS
     * companion of the flagship rollup ("this node's subtotal, and its
@@ -271,7 +285,7 @@ object HierarchyAgg {
     * dropped — it duplicates the root's ALL row.
     *
     * Scale shape: ONE fact shuffle to the finest OUTPUT grain
-    * (leaf, segment); the broadcast closure expands ×depth without
+    * (leaf, segment); the closure expands ×depth without
     * moving facts; the rollup(node, segment) grouping-set aggregate
     * computes both grains additively from the pre-agg partials (no
     * distinct, no second fact pass — the Expand doubles the pre-agg
@@ -279,20 +293,16 @@ object HierarchyAgg {
     * on the numeric sort order at the end (the h4 discipline).
     */
   def hierSegmentCube(facts: DataFrame, aggDim: DataFrame,
-      factKey: String = "leaf_key", segCol: String = "c_mktsegment",
-      broadcastDim: Boolean = true): DataFrame = {
+      factKey: String = "leaf_key", segCol: String = "c_mktsegment"): DataFrame = {
     val pre = facts.groupBy(col(factKey), col(segCol))
       .agg(
         sum(col("sales_amount")).as("__sales"),
         sum(col("unit_quantity")).as("__qty"),
         count(lit(1)).as("__n"))
-    val expanded = pre
-      .join(maybeBroadcast(closureKeys(aggDim), broadcastDim),
-        col(factKey) === col("descendant_node_natural_key"))
     // Column-overload rollup (the String* form trips Spark 4's
     // ambiguous-self-join detector after multi-joins); grouping_id
     // 0 = (node, seg), 1 = (node), 3 = the dropped global cell
-    val agg = expanded
+    val agg = expand(pre, aggDim, factKey)
       .rollup(col("ancestor_node_sort_order"), col(segCol))
       .agg(
         grouping_id().as("__gid"),
@@ -306,39 +316,18 @@ object HierarchyAgg {
       // as SQL's NULL string form in the detail rows
       .withColumn("segment",
         when(col("__gid") === 1, lit("ALL")).otherwise(col(segCol)))
-    val indent = expr("lpad('-', (ancestor_level_number - 1) * 7, '-')")
-    val labels = aggDim.filter(col("net_level") === 0).select(
-      col("ancestor_node_sort_order"),
-      concat(indent, col("ancestor_node_name")).as("product_node_name"))
-    agg
-      .join(maybeBroadcast(labels, broadcastDim),
-        Seq("ancestor_node_sort_order"))
+    labeled(agg, aggDim)
       .orderBy(col("ancestor_node_sort_order"), col("segment"))
       .select("product_node_name", "segment", "sum_sales_amount",
         "sum_unit_quantity", "count_of_fact_records")
   }
 
-  /** Label join + final DFS ordering.
-    * CONTRACT: aggDim must come from HierarchyDimension.aggregationDim
-    * (or satisfy the same invariant): ancestor_node_sort_order is a
-    * non-null row_number, unique per node, so it functionally
-    * determines the label pair. The closure's self-pairs
-    * (net_level = 0) are exactly one row per node — labels need no
-    * distinct() shuffle.
-    */
-  private def withLabels(aggregated: DataFrame, aggDim: DataFrame,
-      broadcastDim: Boolean = true): DataFrame = {
-    val indent = expr("lpad('-', (ancestor_level_number - 1) * 7, '-')")
-    val labels = aggDim.filter(col("net_level") === 0).select(
-      col("ancestor_node_sort_order"),
-      concat(indent, col("ancestor_node_name")).as("product_node_name"),
-      concat(indent, col("ancestor_level_name")).as("product_level_name"))
-    aggregated
-      .join(maybeBroadcast(labels, broadcastDim), Seq("ancestor_node_sort_order"))
+  /** Label join ([[labeled]]) + final DFS ordering. */
+  private def withLabels(aggregated: DataFrame, aggDim: DataFrame): DataFrame =
+    labeled(aggregated, aggDim, withLevel = true)
       .orderBy("ancestor_node_sort_order")
       .select("product_node_name", "product_level_name", "sum_sales_amount",
         "sum_unit_quantity", "distinct_customer_count", "count_of_fact_records")
-  }
 
   /** Per-node TOP CONTRIBUTORS (h26): the k customers with the largest
     * subtree spend under EVERY hierarchy node — the drill-down "who
@@ -353,13 +342,11 @@ object HierarchyAgg {
     * (cross-engine FP-tie convention), ties to the smaller customer.
     */
   def subtreeTopCustomers(facts: DataFrame, aggDim: DataFrame, k: Int = 3,
-      factKey: String = "leaf_key", broadcastDim: Boolean = true): DataFrame = {
+      factKey: String = "leaf_key"): DataFrame = {
     import graft.functions.TopKAggregate.topkRows
     val pair = facts.groupBy(col(factKey), col("customer_id"))
       .agg(sum(col("sales_amount")).as("__s"))
-    val nodeCust = pair
-      .join(maybeBroadcast(closureKeys(aggDim), broadcastDim),
-        col(factKey) === col("descendant_node_natural_key"))
+    val nodeCust = expand(pair, aggDim, factKey)
       .groupBy(col("ancestor_node_sort_order"), col("customer_id"))
       .agg(sum(col("__s")).as("spend"))
     val top = nodeCust.groupBy("ancestor_node_sort_order")
@@ -371,12 +358,7 @@ object HierarchyAgg {
         (col("pos") + 1).cast("long").as("rank"),
         col("t.customer_id").as("customer_id"),
         round(col("t.spend"), 2).as("spend"))
-    val indent = expr("lpad('-', (ancestor_level_number - 1) * 7, '-')")
-    val labels = aggDim.filter(col("net_level") === 0).select(
-      col("ancestor_node_sort_order"),
-      concat(indent, col("ancestor_node_name")).as("product_node_name"))
-    top.join(maybeBroadcast(labels, broadcastDim),
-        Seq("ancestor_node_sort_order"))
+    labeled(top, aggDim)
       .select(col("product_node_name"), col("rank"), col("customer_id"),
         col("spend"))
   }
@@ -391,19 +373,10 @@ object HierarchyAgg {
     * the expanded stream pays group-keyed aggregates only.
     */
   def subtreeMedian(facts: DataFrame, aggDim: DataFrame,
-      valueCol: String, factKey: String = "leaf_key",
-      broadcastDim: Boolean = true): DataFrame = {
-    val expanded = facts.join(
-      maybeBroadcast(closureKeys(aggDim), broadcastDim),
-      col(factKey) === col("descendant_node_natural_key"))
-    val med = Olap.exactMedianByGroup(expanded,
+      valueCol: String, factKey: String = "leaf_key"): DataFrame = {
+    val med = Olap.exactMedianByGroup(expand(facts, aggDim, factKey),
       "ancestor_node_sort_order", valueCol)
-    val indent = expr("lpad('-', (ancestor_level_number - 1) * 7, '-')")
-    val labels = aggDim.filter(col("net_level") === 0).select(
-      col("ancestor_node_sort_order"),
-      concat(indent, col("ancestor_node_name")).as("product_node_name"))
-    med.join(maybeBroadcast(labels, broadcastDim),
-        Seq("ancestor_node_sort_order"))
+    labeled(med, aggDim)
       .select(col("product_node_name"),
         round(col("med"), 6).as("median_value"))
   }
@@ -413,12 +386,10 @@ object HierarchyAgg {
     * are additive partials, and the exact distinct-customer count
     * reads off the grain itself (rows per node). The fact stream pays
     * ONE shuffle (the (leaf, customer) pre-agg with map-side combine),
-    * expands ×depth through the broadcast closure join, then lands on
-    * MV grain.
+    * expands ×depth through the closure join, then lands on MV grain.
     */
   def rollupMv(facts: DataFrame, aggDim: DataFrame,
-      factKey: String = "leaf_key", weight: Column = lit(1L),
-      broadcastDim: Boolean = true): DataFrame =
+      factKey: String = "leaf_key", weight: Column = lit(1L)): DataFrame =
     rollupMvFromPairs(
       facts
         .groupBy(col(factKey), col("customer_id"))
@@ -430,21 +401,19 @@ object HierarchyAgg {
           // mv_n drifts upward and the mv_n != 0 zero-pair drop — which
           // keeps the distinct-customer read-off exact — never fires
           sum(weight).as("mv_n")),
-      aggDim, factKey, broadcastDim)
+      aggDim, factKey)
 
   /** The closure half of [[rollupMv]], public for EXTERNALLY-maintained
     * (leaf, customer)-grain pair stores: the durable streaming rollup
     * (st41) reads its exactly-once MvFold store off into exactly this
     * shape. `pairs` must carry (`factKey`, customer_id, mv_sales,
     * mv_qty, mv_n) — additive partials at pair grain. Dimension-sized
-    * input expands ×depth through the broadcast closure; facts were
-    * already collapsed upstream.
+    * input expands ×depth through the closure; facts were already
+    * collapsed upstream.
     */
   def rollupMvFromPairs(pairs: DataFrame, aggDim: DataFrame,
-      factKey: String = "leaf_key", broadcastDim: Boolean = true): DataFrame =
-    pairs
-      .join(maybeBroadcast(closureKeys(aggDim), broadcastDim),
-        col(factKey) === col("descendant_node_natural_key"))
+      factKey: String = "leaf_key"): DataFrame =
+    expand(pairs, aggDim, factKey)
       .groupBy(col("ancestor_node_sort_order"), col("customer_id"))
       .agg(
         sum(col("mv_sales")).as("mv_sales"),
@@ -460,8 +429,8 @@ object HierarchyAgg {
     * Scale shape: facts pre-aggregate to leaf grain — ONE shuffle with
     * map-side combine, the only point where fact rows move — then the
     * closure (pre-enriched with node metadata, still dim-sized) joins
-    * broadcast and node totals land on |nodes| cardinality WITH their
-    * labels/parent pointers already attached — no second meta join.
+    * with the dimension's strategy and node totals land on |nodes|
+    * cardinality WITH their labels/parent pointers already attached.
     * The parent lookup is a broadcast self-join of that dim-sized
     * aggregate via the parent pointer; its shuffle subtree is
     * byte-identical to the main branch's, so ReuseExchange schedules
@@ -473,22 +442,19 @@ object HierarchyAgg {
     * a root's pct_of_parent is null.
     */
   def contributionRollup(facts: DataFrame, dim: HierarchyDimension,
-      factKey: String = "leaf_key", broadcastDim: Boolean = true): DataFrame = {
+      factKey: String = "leaf_key"): DataFrame = {
     val meta = dim.flaggedNodes.select(
       col("node_id"), col("node_name"), col("level_name"),
       col("parent_node_id"), col("is_root"))
-    // dim × dim enrichment happens on the broadcast build side — the
-    // fact stream sees ONE closure join carrying ids and labels alike
-    // (meta is |nodes|-sized: broadcast it so the enrichment never
-    // sort-merges inside the build branch)
-    val enriched = closureIdKeys(dim.aggregationDim)
-      .join(maybeBroadcast(meta, broadcastDim),
-        col("ancestor_node_id") === col("node_id"))
+    // dim × dim enrichment on the closure side: the fact stream sees
+    // ONE closure join carrying ids and labels alike. A join result
+    // carries no hint, so the dimension's strategy is applied to it.
+    val enriched = dim.joinSide(closureIdKeys(dim.aggregationDim)
+      .join(broadcast(meta), col("ancestor_node_id") === col("node_id")))
     val totals = facts
       .groupBy(col(factKey))
       .agg(sum(col("sales_amount")).as("__s"))
-      .join(maybeBroadcast(enriched, broadcastDim),
-        col(factKey) === col("descendant_node_natural_key"))
+      .join(enriched, col(factKey) === col("descendant_node_natural_key"))
       .groupBy(col("ancestor_node_id"), col("node_name"), col("level_name"),
         col("parent_node_id"), col("is_root"))
       .agg(round(sum(col("__s")), 2).as("sum_sales_amount"))
@@ -501,8 +467,7 @@ object HierarchyAgg {
     val wAll = org.apache.spark.sql.expressions.Window
       .rowsBetween(Long.MinValue, Long.MaxValue)
     totals
-      .join(maybeBroadcast(parents, broadcastDim),
-        col("parent_node_id") === col("__pid"), "left")
+      .join(broadcast(parents), col("parent_node_id") === col("__pid"), "left")
       .withColumn("__rsales",
         sum(when(col("is_root"), col("sum_sales_amount"))).over(wAll))
       .select(
@@ -527,16 +492,7 @@ object HierarchyAgg {
     */
   def concentrationByParent(facts: DataFrame, dim: HierarchyDimension,
       factKey: String = "leaf_key"): DataFrame = {
-    val totals = facts
-      .groupBy(col(factKey)).agg(sum(col("cents")).as("__c"))
-      .join(broadcast(closureIdKeys(dim.aggregationDim)),
-        col(factKey) === col("descendant_node_natural_key"))
-      .groupBy(col("ancestor_node_id")).agg(sum("__c").as("__c"))
-    val meta = dim.flaggedNodes.select(col("node_id"), col("node_name"),
-      col("level_name"), col("parent_node_id"))
-    val kids = totals
-      .join(broadcast(meta), col("ancestor_node_id") === col("node_id"))
-      .filter(col("parent_node_id").isNotNull)
+    val (_, meta, kids) = centTotals(facts, dim, factKey)
     val g = kids.groupBy("parent_node_id")
       .agg(count(lit(1)).as("n_children"),
         sum(col("__c").cast("decimal(19,0)")).as("__s"),
@@ -560,20 +516,16 @@ object HierarchyAgg {
       col("descendant_node_natural_key"),
       col("ancestor_node_id"))
 
-  /** Per-node SIBLING RANK: every non-root node ranked among its
-    * siblings by exact integer-cent subtree total (ties to the node
-    * name), with its share of the parent's subtotal — h17's
-    * percent-of-parent turned into the "which child leads this level"
-    * ordering. One fact pre-agg + broadcast closure → node-grain
-    * totals; the rank window partitions by parent over the DIM-sized
-    * frame; the parent total is a broadcast self-join of that frame.
-    * Fact-free nodes carry no rows (h17's convention).
+  /** Exact integer-cent subtree totals (`facts` carries `cents`):
+    * (node totals keyed by ancestor_node_id, the node metadata, and the
+    * non-root nodes' totals joined to their metadata). One fact pre-agg
+    * to leaf grain; everything after the closure join is node-grain.
     */
-  def siblingRank(facts: DataFrame, dim: HierarchyDimension,
-      factKey: String = "leaf_key"): DataFrame = {
+  private def centTotals(facts: DataFrame, dim: HierarchyDimension,
+      factKey: String): (DataFrame, DataFrame, DataFrame) = {
     val totals = facts
       .groupBy(col(factKey)).agg(sum(col("cents")).as("__c"))
-      .join(broadcast(closureIdKeys(dim.aggregationDim)),
+      .join(closureIdKeys(dim.aggregationDim),
         col(factKey) === col("descendant_node_natural_key"))
       .groupBy(col("ancestor_node_id")).agg(sum("__c").as("__c"))
     val meta = dim.flaggedNodes.select(col("node_id"), col("node_name"),
@@ -581,6 +533,21 @@ object HierarchyAgg {
     val kids = totals
       .join(broadcast(meta), col("ancestor_node_id") === col("node_id"))
       .filter(col("parent_node_id").isNotNull)
+    (totals, meta, kids)
+  }
+
+  /** Per-node SIBLING RANK: every non-root node ranked among its
+    * siblings by exact integer-cent subtree total (ties to the node
+    * name), with its share of the parent's subtotal — h17's
+    * percent-of-parent turned into the "which child leads this level"
+    * ordering. One fact pre-agg + closure join → node-grain
+    * totals; the rank window partitions by parent over the DIM-sized
+    * frame; the parent total is a broadcast self-join of that frame.
+    * Fact-free nodes carry no rows (h17's convention).
+    */
+  def siblingRank(facts: DataFrame, dim: HierarchyDimension,
+      factKey: String = "leaf_key"): DataFrame = {
+    val (totals, _, kids) = centTotals(facts, dim, factKey)
     val parentTot = totals.select(col("ancestor_node_id").as("__pid"),
       col("__c").as("__pc"))
     kids.join(broadcast(parentTot), col("parent_node_id") === col("__pid"))
@@ -599,13 +566,11 @@ object HierarchyAgg {
     * wraps at ~10⁴ × today's fact count); the closed-form population
     * variance (n·Σx² − (Σx)²)/n² runs in doubles of exact decimals at
     * the oracle's parenthesization, and sqrt is IEEE exact-rounded.
-    * One broadcast-closure expansion, group-keyed aggregates only.
+    * One closure expansion, group-keyed aggregates only.
     */
   def subtreeStddev(facts: DataFrame, aggDim: DataFrame,
       factKey: String = "leaf_key"): DataFrame = {
-    val expanded = facts.join(broadcast(closureKeys(aggDim)),
-      col(factKey) === col("descendant_node_natural_key"))
-    val m = expanded.groupBy("ancestor_node_sort_order")
+    val m = expand(facts, aggDim, factKey).groupBy("ancestor_node_sort_order")
       .agg(count(lit(1)).as("n_orders"),
         sum(col("cents").cast("decimal(38,0)")).as("sx"),
         sum((col("cents") * col("cents")).cast("decimal(38,0)")).as("sxx"))
@@ -616,11 +581,7 @@ object HierarchyAgg {
       (nd * col("sxx").cast("double") -
         col("sx").cast("double") * col("sx").cast("double")) / (nd * nd),
       lit(0.0))
-    val indent = expr("lpad('-', (ancestor_level_number - 1) * 7, '-')")
-    val labels = aggDim.filter(col("net_level") === 0).select(
-      col("ancestor_node_sort_order"),
-      concat(indent, col("ancestor_node_name")).as("product_node_name"))
-    m.join(broadcast(labels), Seq("ancestor_node_sort_order"))
+    labeled(m, aggDim)
       .select(col("product_node_name"), col("n_orders"),
         round(col("sx").cast("double") / nd / 100.0, 6).as("mean_value"),
         round(sqrt(varCents) / 100.0, 6).as("stddev_value"))
@@ -832,19 +793,21 @@ object HierarchyAgg {
         .select(col("ancestor_node_sort_order").as(ordAs),
           col("ancestor_node_id"))
     // survivors: every MV row whose node is NOT invalidated, re-keyed
-    // to the new DFS numbering through ONE dim-sized broadcast mapping
-    // (removed nodes drop at the new-ids join)
-    val translation = idsOf(oldDim, "ancestor_node_sort_order")
-      .join(broadcast(idsOf(newDim, "new_ord")), Seq("ancestor_node_id"))
+    // to the new DFS numbering through ONE dim-sized mapping, joined
+    // with the new dimension's strategy (removed nodes drop at the
+    // new-ids join)
+    val translation = newDim.joinSide(idsOf(oldDim, "ancestor_node_sort_order")
+      .join(idsOf(newDim, "new_ord"), Seq("ancestor_node_id"))
       .join(broadcast(invalidated), Seq("ancestor_node_id"), "left_anti")
-      .select("ancestor_node_sort_order", "new_ord")
+      .select("ancestor_node_sort_order", "new_ord"))
     val kept = mv
-      .join(broadcast(translation), Seq("ancestor_node_sort_order"))
+      .join(translation, Seq("ancestor_node_sort_order"))
       .select(col("new_ord").as("ancestor_node_sort_order"),
         col("customer_id"), col("mv_sales"), col("mv_qty"), col("mv_n"))
-    // the NEW closure restricted to invalidated ancestors
-    val repairClosure = newDim.aggregationDim
-      .join(broadcast(invalidated), Seq("ancestor_node_id"))
+    // the NEW closure restricted to invalidated ancestors, joined with
+    // the new dimension's strategy
+    val repairClosure = newDim.joinSide(newDim.aggregationDim
+      .join(broadcast(invalidated), Seq("ancestor_node_id")))
     // reusable leaf partials: the old MV's leaf self-pair rows, keyed
     // by the leaf's natural key (a re-keyed leaf's OLD key no longer
     // matches the new closure, so its stale partials self-exclude)
@@ -853,12 +816,10 @@ object HierarchyAgg {
       .select(col("ancestor_node_sort_order"),
         col("descendant_node_natural_key").as("leaf_key_mv"))
     val mvLeaf = mv
-      .join(broadcast(oldLeafMeta), Seq("ancestor_node_sort_order"))
+      .join(oldLeafMeta, Seq("ancestor_node_sort_order"))
       .select(col("leaf_key_mv"), col("customer_id"),
         col("mv_sales"), col("mv_qty"), col("mv_n"))
-    val repairedFromMv = mvLeaf
-      .join(broadcast(closureKeys(repairClosure)),
-        col("leaf_key_mv") === col("descendant_node_natural_key"))
+    val repairedFromMv = expand(mvLeaf, repairClosure, "leaf_key_mv")
       .groupBy(col("ancestor_node_sort_order"), col("customer_id"))
       .agg(sum("mv_sales").as("mv_sales"), sum("mv_qty").as("mv_qty"),
         sum("mv_n").as("mv_n"))
@@ -896,20 +857,19 @@ object HierarchyAgg {
     *
     * Scale shape: facts pre-aggregate to (leaf, date) grain — ONE
     * shuffle with map-side combine, cardinality |leaves| × |dates| —
-    * then the dim-sized closure union joins broadcast (opt out via
-    * `broadcastDim = false` for pathologically wide versioned
-    * hierarchies, as with every rollup here), the window predicate
-    * picking each row's version.
+    * then the dim-sized closure union joins as it comes (a stored
+    * closure, like the registry's, is sized by Spark's statistics; a
+    * caller hints it otherwise), the window predicate picking each
+    * row's version.
     */
   def historyRollup(facts: DataFrame, closures: DataFrame,
       leafIdCol: String, dateCol: String,
-      validFrom: String = "valid_from", validTo: String = "valid_to",
-      broadcastDim: Boolean = true): DataFrame =
+      validFrom: String = "valid_from", validTo: String = "valid_to"): DataFrame =
     facts
       .groupBy(col(leafIdCol), col(dateCol))
       .agg(sum("sales_amount").as("__s"), sum("unit_quantity").as("__q"),
         count(lit(1)).as("__n"))
-      .join(maybeBroadcast(closures, broadcastDim),
+      .join(closures,
         col("descendant_node_id") === col(leafIdCol) &&
           col(dateCol) >= col(validFrom) && col(dateCol) < col(validTo))
       .groupBy("ancestor_node_id")
@@ -919,11 +879,10 @@ object HierarchyAgg {
 
   /** Serve the reference-shaped rollup from the MV: a |nodes|-sized
     * aggregate (distinct customers = count of MV rows per node) plus
-    * the broadcast label join. Identical output to the exact
+    * the label join. Identical output to the exact
     * [[hierarchicalRollup]] — h9's oracle is the full-recompute SQL.
     */
-  def finalizeRollup(mv: DataFrame, aggDim: DataFrame,
-      broadcastDim: Boolean = true): DataFrame = {
+  def finalizeRollup(mv: DataFrame, aggDim: DataFrame): DataFrame = {
     val aggregated = mv
       .groupBy("ancestor_node_sort_order")
       .agg(
@@ -931,7 +890,7 @@ object HierarchyAgg {
         round(sum(col("mv_qty")), 2).as("sum_unit_quantity"),
         count(col("customer_id")).as("distinct_customer_count"),
         sum(col("mv_n")).as("count_of_fact_records"))
-    withLabels(aggregated, aggDim, broadcastDim)
+    withLabels(aggregated, aggDim)
   }
 
   /** WHAT-IF delta report for a hierarchy edit: which rollup rows
@@ -946,7 +905,7 @@ object HierarchyAgg {
     * aggregates MV-grain rows (|nodes| × |customers| cardinality,
     * never facts; with the zero-fact repair path the full what-if
     * touches no fact rows at 100 TB). Each side translates sort order
-    * → node identity through its own dim-sized broadcast map (sort
+    * → node identity through its own dim-sized map (sort
     * orders are NOT comparable across versions — the DFS numbering
     * shifts with the edit), then BOTH sides union under a version tag
     * and aggregate ONCE: a single shuffle on node_id with the per-side
@@ -954,14 +913,12 @@ object HierarchyAgg {
     * branches full-outer-joined.
     */
   def whatIfDelta(oldMv: DataFrame, newMv: DataFrame,
-      oldDim: HierarchyDimension, newDim: HierarchyDimension,
-      broadcastDim: Boolean = true): DataFrame = {
+      oldDim: HierarchyDimension, newDim: HierarchyDimension): DataFrame = {
     def tagged(mv: DataFrame, dim: HierarchyDimension, tag: String) = {
       val nodeMap = dim.aggregationDim.select(
         col("ancestor_node_sort_order"), col("ancestor_node_id").as("node_id"),
         col("ancestor_node_name").as("__name")).distinct()
-      mv.join(maybeBroadcast(nodeMap, broadcastDim),
-          Seq("ancestor_node_sort_order"))
+      mv.join(nodeMap, Seq("ancestor_node_sort_order"))
         .select(col("node_id"), col("__name"), col("customer_id"),
           col("mv_sales"), col("mv_qty"), col("mv_n"), lit(tag).as("__v"))
     }

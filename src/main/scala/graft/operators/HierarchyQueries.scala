@@ -191,10 +191,13 @@ object HierarchyQueries {
     // the naive single-GROUP-BY shape pays COUNT(DISTINCT)'s Expand
     // over the closure-EXPANDED fact stream (measured 6× h4's floor);
     // here facts collapse to (leaf, customer) grain FIRST — the one
-    // fact shuffle, map-side combined — then the broadcast closure
-    // join expands the dimension-sized pre-agg, the MV-grain
-    // aggregate dedups customers per node, and the node-grain readout
-    // counts the customer groups. Same result, no Expand anywhere.
+    // fact shuffle, map-side combined — then the closure join expands
+    // the dimension-sized pre-agg, the MV-grain aggregate dedups
+    // customers per node, and the node-grain readout counts the
+    // customer groups. Same result, no Expand anywhere. The statement
+    // carries no join hints: the registered closure view keeps the
+    // dimension's own strategy (a broadcast hint here), which reaches
+    // both the closure join and the label join.
     "h33_sql_rollup" -> ((s, d) => {
       dimension(s, d).aggregationDim
         .createOrReplaceTempView("g_product_aggregation_dim")
@@ -209,8 +212,7 @@ object HierarchyQueries {
           GROUP BY leaf_key, customer_id
         ),
         mv AS (
-          SELECT /*+ BROADCAST(a) */
-                 a.ancestor_node_sort_order, p.customer_id,
+          SELECT a.ancestor_node_sort_order, p.customer_id,
                  SUM(p.mv_sales) AS mv_sales,
                  SUM(p.mv_qty) AS mv_qty,
                  SUM(p.mv_n) AS mv_n
@@ -228,8 +230,7 @@ object HierarchyQueries {
           FROM mv
           GROUP BY ancestor_node_sort_order
         )
-        SELECT /*+ BROADCAST(lbl) */
-               lpad('-', (ancestor_level_number - 1) * 7, '-')
+        SELECT lpad('-', (ancestor_level_number - 1) * 7, '-')
                  || ancestor_node_name AS product_node_name,
                lpad('-', (ancestor_level_number - 1) * 7, '-')
                  || ancestor_level_name AS product_level_name,
@@ -321,14 +322,15 @@ object HierarchyQueries {
         partDimension(s, d).aggregationDim)
     }),
     // the PATHOLOGICALLY-WIDE-dimension fallback, driver-gated (round
-    // 20, r19 verdict #4): h6's 20k-leaf rollup with
-    // `broadcastDim = false` — the path for closures past executor
-    // broadcast limits, where forcing a driver-side build would OOM
-    // and the dim joins must go shuffle-side instead. The merge hint
-    // pins the optimizer to the sort-merge strategy at every SF (test
-    // dims are broadcast-sized, so without the pin the gate would
-    // quietly exercise the broadcast plan anyway); results must equal
-    // the broadcast path's exactly — oracle = h6's SQL verbatim.
+    // 20, r19 verdict #4): h6's 20k-leaf rollup on the shuffle path —
+    // the path for closures past executor broadcast limits, where
+    // forcing a driver-side build would OOM and the dim joins must go
+    // shuffle-side instead. The merge hint, placed outside the
+    // dimension's own broadcast hint, overrides it and pins the
+    // sort-merge strategy at every SF (test dims are broadcast-sized,
+    // so without the pin the gate would quietly exercise the broadcast
+    // plan anyway); results must equal the broadcast path's exactly —
+    // oracle = h6's SQL verbatim.
     "h35_shuffle_dim_rollup" -> ((s, d) => {
       val facts = HierarchyAgg.salesFacts(s, d)
         .withColumn("leaf_key", col("l_partkey").cast("long"))
@@ -340,8 +342,7 @@ object HierarchyQueries {
       // this one. (h6's customer key would NOT satisfy the SMJ and
       // would re-shuffle the pair stream on leaf_key anyway.)
       HierarchyAgg.hierarchicalRollup(facts.repartition(col("leaf_key")),
-        partDimension(s, d).aggregationDim.hint("merge"),
-        broadcastDim = false)
+        partDimension(s, d).aggregationDim.hint("merge"))
     }),
     // the 100 TB rollup mode: approx_count_distinct replaces the exact
     // distinct (no customer-grain re-shuffle; HLL sketches merge in
@@ -519,8 +520,9 @@ object HierarchyQueries {
     // i.e. a cross-hierarchy subtotal lattice. Scale shape: facts
     // pre-aggregate to the (geo leaf, part leaf) grain — one shuffle
     // with map-side combine, cardinality bounded by the dim cross
-    // product, not the fact count — then BOTH closures join broadcast
-    // and the final groupBy lands on ancestor-pair keys. The brand
+    // product, not the fact count — then BOTH closures join with their
+    // dimension's strategy (broadcast here) and the final groupBy lands
+    // on ancestor-pair keys. The brand
     // closure keeps ancestors at Brand level and up (leaf-grain output
     // belongs to h6); sums/counts only — a cross-hierarchy exact
     // distinct would need customer grain (h4's pre-agg) per pair.
@@ -658,8 +660,9 @@ object HierarchyQueries {
     * i.e. a cross-hierarchy subtotal lattice. Scale shape: facts
     * pre-aggregate to the (geo leaf, part leaf) grain — one shuffle
     * with map-side combine, cardinality bounded by the dim cross
-    * product, not the fact count — then BOTH closures join broadcast
-    * and the final groupBy lands on ancestor-pair keys. The brand
+    * product, not the fact count — then BOTH closures join with their
+    * dimension's strategy (broadcast for a dimension leveled in one
+    * task) and the final groupBy lands on ancestor-pair keys. The brand
     * closure keeps ancestors at Brand level and up (leaf-grain output
     * belongs to h6).
     *
@@ -683,7 +686,7 @@ object HierarchyQueries {
       approxDistinct: Boolean, exactDistinct: Boolean = false): DataFrame = {
     // the ×depth²-expanded fact stream carries and hashes ONLY the two
     // numeric sort-order keys; the six string/level label columns join
-    // broadcast onto the 806-row aggregate afterwards (same trick as
+    // onto the 806-row aggregate afterwards (same trick as
     // the single-hierarchy engine's withLabels — the sort order is a
     // unique row_number, so it functionally determines the labels)
     val geo = dimension(s, d).aggregationDim.select(
@@ -691,12 +694,12 @@ object HierarchyQueries {
       col("descendant_node_natural_key").as("geo_desc_key"))
     val partDim = partDimension(s, d).aggregationDim
     // the lattice's brand axis never outputs below Brand (part grain
-    // belongs to h6), so route facts part → brand with a broadcast
+    // belongs to h6), so route facts part → brand with a closure-derived
     // map BEFORE the pre-agg: the pre-agg grain collapses from
     // (geo leaf × 20k parts) to (geo leaf × ~26 brands) — which is
     // what the shuffle (and h12's per-row HLL sketch payload) carries.
-    // Both this map and the old part-keyed closure are part-dim-sized
-    // broadcasts; the grain of the pre-agg OUTPUT is what changes.
+    // Both this map and the old part-keyed closure are part-dim-sized;
+    // the grain of the pre-agg OUTPUT is what changes.
     val partToBrand = partDim
       .filter(col("net_level") === 1 && col("ancestor_level_number") === 2)
       .select(col("descendant_node_natural_key").as("pb_part_key"),
@@ -725,8 +728,7 @@ object HierarchyQueries {
     val preKeys = Seq(col("leaf_key"), col("brand_key")) ++
       (if (exactDistinct) Seq(col("customer_id")) else Nil)
     val pre = HierarchyAgg.salesFacts(s, d)
-      .join(broadcast(partToBrand),
-        col("l_partkey").cast("long") === col("pb_part_key"))
+      .join(partToBrand, col("l_partkey").cast("long") === col("pb_part_key"))
       .groupBy(preKeys: _*)
       .agg(preMeasures.head, preMeasures.tail: _*)
     val finalMeasures = Seq(
@@ -742,13 +744,13 @@ object HierarchyQueries {
         Seq(count_distinct(col("customer_id")).as("distinct_customer_count"))
       else Nil)
     pre
-      .join(broadcast(geo), col("leaf_key") === col("geo_desc_key"))
-      .join(broadcast(brand), col("brand_key") === col("brand_desc_key"))
+      .join(geo, col("leaf_key") === col("geo_desc_key"))
+      .join(brand, col("brand_key") === col("brand_desc_key"))
       .groupBy("geo_ord", "brand_ord")
       .agg(finalMeasures.head, finalMeasures.tail: _*)
-      .join(broadcast(labels(dimension(s, d), "geo", "geo_ord")), Seq("geo_ord"))
-      .join(broadcast(labels(partDimension(s, d), "brand", "brand_ord")
-        .filter(col("brand_level") <= 2)), Seq("brand_ord"))
+      .join(labels(dimension(s, d), "geo", "geo_ord"), Seq("geo_ord"))
+      .join(labels(partDimension(s, d), "brand", "brand_ord")
+        .filter(col("brand_level") <= 2), Seq("brand_ord"))
       .select(Seq("geo_node_id", "geo_node_name", "geo_level",
         "brand_node_id", "brand_node_name", "brand_level",
         "sum_sales_amount", "sum_unit_quantity", "count_of_fact_records")

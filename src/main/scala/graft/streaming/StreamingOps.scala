@@ -1160,8 +1160,7 @@ object StreamingQueries {
 
   private def mvStreamDir(s: SparkSession, d: String): String =
     graft.Artifacts.memo(s, "stream.mv", d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_mv_stream")
-        .resolve("facts").toString
+      val dir = graft.Artifacts.sessionDir(s, "graft_mv_stream")
       // prune to the MV's columns before the temp write: the stream
       // (and the write) carry only what rollupMv reads
       graft.operators.HierarchyAgg.salesFacts(s, d)
@@ -1178,8 +1177,7 @@ object StreamingQueries {
     */
   private def mvRetractStreamDir(s: SparkSession, d: String): String =
     graft.Artifacts.memo(s, "stream.mvr", d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_mvr_stream")
-        .resolve("facts").toString
+      val dir = graft.Artifacts.sessionDir(s, "graft_mvr_stream")
       val facts = graft.operators.HierarchyAgg.salesFacts(s, d)
       val cols = Seq("leaf_key", "customer_id", "unit_quantity",
         "sales_amount").map(col)
@@ -1195,8 +1193,7 @@ object StreamingQueries {
 
   private def ndStreamDir(s: SparkSession, d: String): String =
     graft.Artifacts.memo(s, "stream.nd", d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_nd_stream")
-        .resolve("batch").toString
+      val dir = graft.Artifacts.sessionDir(s, "graft_nd_stream")
       Tables.documents(s, d).filter(pmod(col("doc_id"), lit(5)) === 0)
         .repartition(2).write.mode("overwrite").parquet(dir)
       dir
@@ -1208,8 +1205,7 @@ object StreamingQueries {
     */
   private def decontamStreamDir(s: SparkSession, d: String): String =
     graft.Artifacts.memo(s, "stream.decontam", d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_dc_stream")
-        .resolve("batch").toString
+      val dir = graft.Artifacts.sessionDir(s, "graft_dc_stream")
       Tables.documents(s, d).filter(pmod(col("doc_id"), lit(50)) =!= 0)
         .repartition(2).write.mode("overwrite").parquet(dir)
       dir
@@ -1217,8 +1213,7 @@ object StreamingQueries {
 
   private def embStreamDir(s: SparkSession, d: String): String =
     graft.Artifacts.memo(s, "stream.emb", d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_emb_stream")
-        .resolve("batch").toString
+      val dir = graft.Artifacts.sessionDir(s, "graft_emb_stream")
       Tables.embeddings(s, d).filter(pmod(col("vec_id"), lit(5)) === 0)
         .repartition(2).write.mode("overwrite").parquet(dir)
       dir
@@ -1230,8 +1225,7 @@ object StreamingQueries {
     */
   private def quarantineStreamDir(s: SparkSession, d: String): String =
     graft.Artifacts.memo(s, "stream.quarantine", d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_q_stream")
-        .resolve("batch").toString
+      val dir = graft.Artifacts.sessionDir(s, "graft_q_stream")
       import s.implicits._
       Tables.documents(s, d)
         .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
@@ -1257,8 +1251,7 @@ object StreamingQueries {
     */
   private def tilesStreamDir(s: SparkSession, d: String): String =
     graft.Artifacts.memo(s, "stream.tiles", d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_tile_stream")
-        .resolve("batch").toString
+      val dir = graft.Artifacts.sessionDir(s, "graft_tile_stream")
       import s.implicits._
       Tables.documents(s, d)
         .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
@@ -1280,8 +1273,7 @@ object StreamingQueries {
     */
   private def ordersMvStreamDir(s: SparkSession, d: String): String =
     graft.Artifacts.memo(s, "stream.ordmv", d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ordmv_stream")
-        .resolve("facts").toString
+      val dir = graft.Artifacts.sessionDir(s, "graft_ordmv_stream")
       Tables.orders(s, d).select(
           col("o_orderpriority"),
           year(col("o_orderdate")).cast("long").as("order_year"),
@@ -1297,8 +1289,7 @@ object StreamingQueries {
     */
   private def ordersRetractStreamDir(s: SparkSession, d: String): String =
     graft.Artifacts.memo(s, "stream.ordmvr", d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ordrt_stream")
-        .resolve("facts").toString
+      val dir = graft.Artifacts.sessionDir(s, "graft_ordrt_stream")
       val ord = Tables.orders(s, d)
       val sel = Seq(col("o_orderpriority"),
         year(col("o_orderdate")).cast("long").as("order_year"),
@@ -1317,8 +1308,7 @@ object StreamingQueries {
     */
   private def docsStreamDir(s: SparkSession, d: String): String =
     graft.Artifacts.memo(s, "stream.docsfull", d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_docs_stream")
-        .resolve("batch").toString
+      val dir = graft.Artifacts.sessionDir(s, "graft_docs_stream")
       Tables.documents(s, d)
         .repartition(2).write.mode("overwrite").parquet(dir)
       dir
@@ -1338,7 +1328,8 @@ object StreamingQueries {
     * directory, so this is one holding a symlink to it. */
   private def eventsStreamDir(s: SparkSession, d: String): String =
     graft.Artifacts.memo(s, "stream.events", d) {
-      val dir = Files.createTempDirectory("graft_stream")
+      val dir = Files.createDirectories(
+        Paths.get(graft.Artifacts.sessionDir(s, "graft_events_stream")))
       Files.createSymbolicLink(dir.resolve("events.parquet"),
         Paths.get(s"$d/events.parquet"))
       dir.toString
@@ -1467,7 +1458,7 @@ object StreamingQueries {
     // oracle (st13's closed-window SQL) checks windowing, emission
     // and durability together.
     "st16_stream_histogram_sink" -> ((s, d) => {
-      val out = graft.Artifacts.sinkDir(s, "graft_hist_sink")
+      val out = graft.Artifacts.sessionDir(s, "graft_hist_sink")
       driveEvents(s, d)(ev =>
         StreamingOpsSinks.parquetSink(StreamingOps.histogramStream(ev), out))
       s.read.parquet(out)
@@ -1993,7 +1984,7 @@ object StreamingQueries {
       import graft.operators.{MvSum, MvCount, MvBitmapDistinct}
       val dir = ordersMvStreamDir(s, d)
       val schema = Tables.schema(s, dir)
-      val out = graft.Artifacts.sinkDir(s, "graft_mvsink")
+      val out = graft.Artifacts.sessionDir(s, "graft_mvsink")
       val keys = Seq("o_orderpriority", "order_year")
       val measures = Seq(MvSum("sum_cents", col("cents")),
         MvCount("n_orders"),
@@ -2020,7 +2011,7 @@ object StreamingQueries {
       val adim = graft.operators.HierarchyQueries.dimension(s, d).aggregationDim
       val dir = mvStreamDir(s, d)
       val schema = Tables.schema(s, dir)
-      val out = graft.Artifacts.sinkDir(s, "graft_hrmv")
+      val out = graft.Artifacts.sessionDir(s, "graft_hrmv")
       val keys = Seq("leaf_key", "customer_id")
       val measures = Seq(MvSum("mv_sales", col("sales_amount")),
         MvSum("mv_qty", col("unit_quantity")), MvCount("mv_n"))
@@ -2046,7 +2037,7 @@ object StreamingQueries {
       val adim = graft.operators.HierarchyQueries.dimension(s, d).aggregationDim
       val dir = mvRetractStreamDir(s, d)
       val schema = Tables.schema(s, dir)
-      val out = graft.Artifacts.sinkDir(s, "graft_rtmv")
+      val out = graft.Artifacts.sessionDir(s, "graft_rtmv")
       val keys = Seq("leaf_key", "customer_id")
       val measures = Seq(MvSum("mv_sales", col("sales_amount")),
         MvSum("mv_qty", col("unit_quantity")), MvCount("mv_n"))
@@ -2071,7 +2062,7 @@ object StreamingQueries {
     "st40_stream_quantile_mv" -> ((s, d) => {
       val dir = ordersMvStreamDir(s, d)
       val schema = Tables.schema(s, dir)
-      val out = graft.Artifacts.sinkDir(s, "graft_histmv")
+      val out = graft.Artifacts.sessionDir(s, "graft_histmv")
       val keys = Seq("o_orderpriority", "order_year")
       val (lo, hi, nb) = (0L, 1L << 26, 4096)
       withScratchCheckpoint(StreamingOpsSinks.streamHistMvToParquet(
@@ -2091,7 +2082,7 @@ object StreamingQueries {
     "st43_stream_quantile_retraction" -> ((s, d) => {
       val dir = ordersRetractStreamDir(s, d)
       val schema = Tables.schema(s, dir)
-      val out = graft.Artifacts.sinkDir(s, "graft_histrt")
+      val out = graft.Artifacts.sessionDir(s, "graft_histrt")
       val keys = Seq("o_orderpriority", "order_year")
       val (lo, hi, nb) = (0L, 1L << 26, 4096)
       withScratchCheckpoint(StreamingOpsSinks.streamHistMvToParquet(
@@ -2114,7 +2105,7 @@ object StreamingQueries {
       val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
       val dir = ndStreamDir(s, d)
       val schema = Tables.schema(s, dir)
-      val out = graft.Artifacts.sinkDir(s, "graft_nd_sink")
+      val out = graft.Artifacts.sessionDir(s, "graft_nd_sink")
       withScratchCheckpoint(StreamingOpsSinks.streamNearDupToParquet(
         s, corpus, dir, schema, out, _, minJaccard = 0.05))
       s.read.parquet(out)
@@ -2132,7 +2123,7 @@ object StreamingQueries {
       val corpusEmb = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
       val dir = embStreamDir(s, d)
       val schema = Tables.schema(s, dir)
-      val out = graft.Artifacts.sinkDir(s, "graft_sem_sink")
+      val out = graft.Artifacts.sessionDir(s, "graft_sem_sink")
       // targetClusterSize pins the SINGLE-CLUSTER regime (autoK = 1)
       // at every gate SF BY CONFIGURATION, not by corpus-size
       // accident — the exact-oracle argument below requires it, and

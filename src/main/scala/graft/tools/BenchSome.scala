@@ -24,13 +24,8 @@ object BenchSome {
       catch { case e: Throwable =>
         System.err.println(s"[benchsome] warmup $n skipped: ${e.getMessage}") }
     }
-    try {
-      graft.operators.HierarchyQueries.warmDims(spark, sfDir)
-      graft.operators.DedupQueries.warmComponents(spark, sfDir)
-      graft.operators.SimilarityQueries.warmGraph(spark, sfDir)
-      graft.streaming.StreamingQueries.warmFixtures(spark, sfDir)
-      graft.operators.GraphQueries.warmEdges(spark, sfDir)
-    } catch { case e: Throwable =>
+    try graft.SparkEntry.warmArtifacts(spark, sfDir)
+    catch { case e: Throwable =>
       System.err.println(s"[benchsome] pre-warm skipped: ${e.getMessage}") }
     val results = names.map { n =>
       val fn = graft.SparkEntry.queries(n)

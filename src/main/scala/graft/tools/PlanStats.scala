@@ -23,12 +23,8 @@ object PlanStats {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     val spark = graft.GraftSession.local(cpus.toInt)
-    try {
-      graft.operators.HierarchyQueries.warmDims(spark, sfDir)
-      graft.operators.DedupQueries.warmComponents(spark, sfDir)
-      graft.operators.SimilarityQueries.warmGraph(spark, sfDir)
-      graft.operators.GraphQueries.warmEdges(spark, sfDir)
-    } catch { case e: Throwable =>
+    try graft.SparkEntry.warmArtifacts(spark, sfDir)
+    catch { case e: Throwable =>
       System.err.println(s"[planstats] pre-warm skipped: ${e.getMessage}") }
     def one(n: String): (Int, Double) = {
       val fn = graft.SparkEntry.queries(n)

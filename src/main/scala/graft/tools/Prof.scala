@@ -23,10 +23,7 @@ object Prof {
         .queryExecution.toRdd.count()
       catch { case e: Throwable => System.err.println(s"warm $n: ${e.getMessage}") }
     }
-    graft.operators.HierarchyQueries.warmDims(spark, sfDir)
-    graft.operators.SimilarityQueries.warmGraph(spark, sfDir)
-    graft.operators.DedupQueries.warmComponents(spark, sfDir)
-    graft.streaming.StreamingQueries.warmFixtures(spark, sfDir)
+    graft.SparkEntry.warmArtifacts(spark, sfDir)
     names.foreach { n =>
       val ts = (1 to 3).map { _ =>
         val t0 = System.nanoTime()

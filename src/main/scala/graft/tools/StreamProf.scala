@@ -38,8 +38,7 @@ object StreamProf {
         .queryExecution.toRdd.count()
       catch { case e: Throwable => System.err.println(s"warm $n: ${e.getMessage}") }
     }
-    graft.operators.HierarchyQueries.warmDims(spark, sfDir)
-    graft.streaming.StreamingQueries.warmFixtures(spark, sfDir)
+    graft.SparkEntry.warmArtifacts(spark, sfDir)
 
     case class Batch(id: Long, durs: Map[String, Long], rows: Long)
     val batches = ArrayBuffer[Batch]()

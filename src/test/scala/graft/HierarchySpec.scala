@@ -956,21 +956,69 @@ class HierarchySpec extends SparkSpec {
     }
   }
 
-  test("broadcastDim=false (wide-dim shuffle fallback) is result-identical") {
+  test("merge hint (wide-dim shuffle fallback): result-identical, closure sort-merged") {
+    // a fact slice no stored MV covers: the plan must be planned, not
+    // served from the cached h16 MV (cache lookup ignores hints)
     val facts = HierarchyAgg.salesFacts(spark, sf)
+      .filter(pmod(col("customer_id"), lit(2)) === 0)
     val dim = HierarchyQueries.dimension(spark, sf).aggregationDim
     val b = HierarchyAgg.hierarchicalRollup(facts, dim).collect()
-    val s = HierarchyAgg.hierarchicalRollup(facts, dim, broadcastDim = false).collect()
-    assert(b.toSeq == s.toSeq)
-    // broadcastDim=false drops the FORCED hint — the optimizer then
-    // sizes the join itself (it may still auto-broadcast a small dim,
-    // which is exactly the desired behavior; a 100M-node closure
-    // would exceed the threshold and fall back to shuffle)
-    val hints = HierarchyAgg.hierarchicalRollup(facts, dim, broadcastDim = false)
-      .queryExecution.logical.collect {
-        case h: org.apache.spark.sql.catalyst.plans.logical.UnresolvedHint => h
+    val merged = HierarchyAgg.hierarchicalRollup(facts, dim.hint("merge"))
+    assert(b.toSeq == merged.collect().toSeq)
+    // the outer merge hint overrides the dimension's broadcast hint:
+    // the closure join plans as a sort-merge, never a broadcast build
+    val p = merged.queryExecution.sparkPlan.toString
+    val smj = p.linesIterator.filter(_.contains("SortMergeJoin")).toSeq
+    assert(smj.exists(_.contains("descendant_node_natural_key")), p)
+    assert(!p.linesIterator.exists(l => l.contains("BroadcastHashJoin") &&
+      l.contains("descendant_node_natural_key")), p)
+  }
+
+  test("the dimension picks the closure join strategy: broadcast single-task, unhinted distributed") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
+    // the toy tree once under the single-task leveling bound, once
+    // forced onto the distributed path (maxNodes below its 6 nodes)
+    val single = new HierarchyDimension(toy)
+    val distributed = new HierarchyDimension(toy, maxNodes = 2L)
+    val facts = Seq((11L, 1L, 2.0, 10.0), (12L, 2L, 1.0, 5.0), (21L, 1L, 3.0, 7.5))
+      .toDF("leaf_key", "customer_id", "unit_quantity", "sales_amount")
+    def closureJoinHint(d: HierarchyDimension) = {
+      val df = HierarchyAgg.hierarchicalRollup(facts, d.aggregationDim)
+      val hints = df.queryExecution.optimizedPlan.collect {
+        case j: Join if j.condition.exists(_.references.exists(
+            _.name == "descendant_node_natural_key")) =>
+          j.hint.rightHint.flatMap(_.strategy)
       }
-    assert(hints.isEmpty, s"expected no broadcast hints, got $hints")
+      assert(hints.size == 1, df.queryExecution.optimizedPlan)
+      (df.collect().toSeq, hints.head)
+    }
+    val (singleRows, singleHint) = closureJoinHint(single)
+    val (distRows, distHint) = closureJoinHint(distributed)
+    assert(singleHint.contains(BROADCAST))
+    assert(distHint.isEmpty, s"distributed closure join hinted $distHint")
+    assert(singleRows == distRows)
+    assert(singleRows.size == 6)
+  }
+
+  test("source gate: the rollup operators take no join-strategy flag") {
+    import scala.jdk.CollectionConverters._
+    val banned = Seq("broadcast" + "Dim", "maybe" + "Broadcast")
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 80, s"scanned only ${files.size} files under src")
+    val hits = for {
+      f <- files
+      (line, i) <- scala.io.Source.fromFile(f.toFile, "UTF-8")
+        .getLines().toSeq.zipWithIndex
+      if banned.exists(line.contains)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+    // the closure and its key projections join as they come: no
+    // explicit broadcast around them in the rollup operators
+    val agg = scala.io.Source.fromFile(
+      "src/main/scala/graft/operators/HierarchyAgg.scala", "UTF-8").mkString
+    val wrapped = """broadcast\(\s*closure(Id)?Keys\(""".r.findAllIn(agg).toSeq
+    assert(wrapped.isEmpty, wrapped.mkString("\n"))
   }
 
   test("persisted dims reload byte-equal to re-derivation and serve the rollup") {

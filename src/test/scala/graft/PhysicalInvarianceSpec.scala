@@ -16,7 +16,11 @@ class PhysicalInvarianceSpec extends SparkSpec {
   private def rows(s: SparkSession, name: String): Seq[String] =
     SparkEntry.queries(name)(s, sf).collect().map(_.toString).toSeq.sorted
 
-  for (name <- Seq("g13_connected_components", "d6_dup_clusters"))
+  // g13/d6: the connected-components loops; h4, h6, h35 and h9: the
+  // rollups whose closure join strategy the dimension picks
+  for (name <- Seq("g13_connected_components", "d6_dup_clusters",
+      "h4_hier_agg", "h6_hier_agg_parts", "h35_shuffle_dim_rollup",
+      "h9_incremental_rollup"))
     test(s"$name: the default session's rows under each setting") {
       val want = rows(spark, name)
       assert(want.nonEmpty, s"$name returned no rows")

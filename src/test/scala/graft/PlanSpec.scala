@@ -97,8 +97,8 @@ class PlanSpec extends SparkSpec {
 
   test("h35: the wide-dim fallback joins the closure shuffle-side — no broadcast build of the dim") {
     val p = plan("h35_shuffle_dim_rollup")
-    // broadcastDim = false + the merge hint: the closure and label
-    // joins ride sort-merge (the no-driver-OOM path); the two-phase
+    // the merge hint over the dimension's broadcast hint: the closure
+    // and label joins ride sort-merge (the no-driver-OOM path); the two-phase
     // distinct discipline still holds (no Expand)
     assert(p.contains("SortMergeJoin"), p)
     assert(!p.contains("Expand"), p)

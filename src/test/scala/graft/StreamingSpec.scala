@@ -618,6 +618,36 @@ class StreamingSpec extends SparkSpec {
     assert(left.isEmpty, s"sink directories left after releasePins: $left")
   }
 
+  test("releasePins deletes the stream fixture directories st9 and st41 wrote") {
+    import scala.jdk.CollectionConverters._
+    def ls(d: java.nio.file.Path): List[java.nio.file.Path] =
+      try {
+        val st = java.nio.file.Files.list(d)
+        try st.iterator().asScala.toList finally st.close()
+      } catch { // deleted meanwhile
+        case _: java.io.IOException | _: java.io.UncheckedIOException => Nil
+      }
+    // every graft_*_stream* entry in the JVM tmpdir or in one of its
+    // session directories
+    def fixtureDirs(): Set[java.nio.file.Path] = {
+      val top = ls(java.nio.file.Paths.get(sys.props("java.io.tmpdir")))
+      (top ++ top.filter(_.getFileName.toString.startsWith("graft_session"))
+          .flatMap(ls)).filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("graft_") && n.contains("_stream") && !n.contains("ckpt")
+      }.toSet
+    }
+    val before = fixtureDirs()
+    val s = spark.newSession()
+    Seq("st9_incremental_rollup_stream", "st41_stream_hier_rollup").foreach { name =>
+      assert(SparkEntry.queries(name)(s, sf).count() > 0, s"$name returned no rows")
+    }
+    assert((fixtureDirs() -- before).nonEmpty, "no fixture directory was written")
+    Graft.releasePins(s)
+    val left = fixtureDirs() -- before
+    assert(left.isEmpty, s"fixture directories left after releasePins: $left")
+  }
+
   test("streamToParquet: durable file sink with checkpoint equals the batch filter") {
     val dir = java.nio.file.Files.createTempDirectory("events_sink_src")
     java.nio.file.Files.createSymbolicLink(
