@@ -50,30 +50,18 @@ object Bench {
           f"$foldMaxLoad%.2f — measuring, but floor fold is DISABLED " +
           "(re-run idle to fold; override with SPARK_GRAFT_FOLD_MAXLOAD) ========")
     val spark = GraftSession.local(cpus.toInt)
-    // JVM/codegen warmup: run every query once at the smallest SF so
-    // measured times reflect steady state (codegen compiled, JIT warm)
-    // rather than first-call compilation; best-effort per query (never
-    // aborts the bench)
-    val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, warmDir).queryExecution.toRdd.count()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warmup $name skipped: ${e.getMessage}") }
-    }
-    // shared-derivation pre-warm at the TIMED SF: the sf0.001 warmup
-    // doesn't touch the timed sfDir's session caches (keyed by sfDir),
-    // so without this the alphabetically-first consumer (h10 for the
-    // hierarchy dims, d10 for the dedup components) is billed for a
-    // one-time build every other query reads for free.
-    // Success + duration are REPORTED in the output JSON: a silently
-    // failed warm would otherwise bill the first consumer for the cold
-    // build with no marker in the results.
-    val warmT0 = System.nanoTime()
-    val warmOk =
-      try { SparkEntry.warmArtifacts(spark, sfDir); true } catch { case e: Throwable =>
-        System.err.println(s"[bench] cache pre-warm skipped: ${e.getMessage}")
-        false }
-    val warmSec = (System.nanoTime() - warmT0) / 1e9
+    // warm protocol (SparkEntry.warm): every query once at the smallest
+    // SF so measured times reflect steady state (codegen compiled, JIT
+    // warm) rather than first-call compilation, then the shared
+    // artifacts at the TIMED SF — the sf0.001 pass doesn't touch the
+    // timed sfDir's session caches (keyed by sfDir), so without it the
+    // alphabetically-first consumer (h10 for the hierarchy dims, d10
+    // for the dedup components) is billed for a one-time build every
+    // other query reads for free. Best-effort: never aborts the bench.
+    // Success + duration of the artifact warm are REPORTED in the
+    // output JSON: a silently failed warm would otherwise bill the
+    // first consumer for the cold build with no marker in the results.
+    val (warmOk, warmSec) = SparkEntry.warm(spark, SparkEntry.queries.keys.toSeq, sfDir)
     // noise control: the per-round driver runs on a contended host
     // (observed ±50% per-query swings round to round); each query is
     // timed TWICE and reports the min, which tracks fresh uncontended
@@ -151,7 +139,7 @@ object Bench {
       .getOperatingSystemMXBean.getSystemLoadAverage
     // SELF-DISPOSITION (r17 verdict #1): a contended sweep previously
     // shipped its >2×-of-floor readings as an open question the next
-    // round had to answer with manual idle BenchOne runs. Close that
+    // round had to answer with manual idle re-runs. Close that
     // loop in the tool: after the sweep, every entry whose best run
     // exceeded 2× its committed floor is re-measured — the tool first
     // waits for the 1-min host load to decay below the fold threshold

@@ -78,6 +78,18 @@ object Graft {
   def releasePins(spark: SparkSession): Unit =
     Artifacts.releaseAll(spark)
 
+  /** Run `body` and report what it did: wall time, the returned
+    * frame's planning phases and analyzed-plan size, its Spark jobs,
+    * stages and tasks with task time and shuffle, spill and result
+    * bytes, and each micro-batch of the streams it ran (see [[Trace]]).
+    * {{{
+    * val (n, report) = Graft.trace(spark)(Graft.hierarchicalRollup(facts, dim).count())
+    * println(report.json)
+    * }}}
+    */
+  def trace[T](spark: SparkSession)(body: => T): (T, Trace.Report) =
+    Trace(spark)(body)
+
   /** Persist derived dims as parquet (the reference materializes its
     * dims as stored tables, hierarchy_dimension_table.py:75-82);
     * reload with [[loadDim]] — no re-derivation.

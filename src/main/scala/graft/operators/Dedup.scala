@@ -783,18 +783,20 @@ object Dedup {
     withCenters.filter(col("src") =!= col("dst")).distinct()
   }
 
-  /** Single-task exact union-find over a small edge frame (both
-    * columns of `e` share `idType`): returns (__id, __comp) for every
+  /** Single-task exact union-find over small (src, dst) edge rows
+    * (both columns share `idType`; duplicate edges are harmless):
+    * returns (__id, __comp) for every
     * node that appears in an edge, component = min id by the column
     * type's own ordering (so numeric ids compare numerically, strings
     * lexically — identical semantics to the distributed path).
     */
-  private def localUnionFind(e: DataFrame,
+  private def localUnionFind(spark: org.apache.spark.sql.SparkSession,
+      edgeRows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
       idType: org.apache.spark.sql.types.DataType): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     val ord = org.apache.spark.sql.catalyst.util.TypeUtils
       .getInterpretedOrdering(idType)
-    val out = e.coalesce(1).queryExecution.toRdd.mapPartitions { rows =>
+    val out = edgeRows.coalesce(1).mapPartitions { rows =>
       val parent = new java.util.HashMap[Any, Any]()
       def copyOf(v: Any): Any = v match {
         // values extracted from reused UnsafeRow buffers must be copied
@@ -831,7 +833,7 @@ object Dedup {
       }
     }
     org.apache.spark.sql.GraftColumnBridge.dataFrameFromInternalRows(
-      e.sparkSession,
+      spark,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("__id", idType),
         org.apache.spark.sql.types.StructField("__comp", idType))),
@@ -845,11 +847,30 @@ object Dedup {
       maxIter: Int, localEdgeThreshold: Long = 2000000L): DataFrame = {
     val caller = nodes.sparkSession
     val aqeOff = "spark.sql.adaptive.enabled" -> "false"
-    val edgesOff = GraftSession.rebind(GraftSession.scoped(caller, aqeOff), edges)
-    var e = materialized(
-      edgesOff.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct())
+    val raw = GraftSession.rebind(GraftSession.scoped(caller, aqeOff), edges)
+      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .filter(col("src") =!= col("dst"))
+    // both paths read these rows: a later job over the same RDD skips
+    // the shuffle stages the count already ran
+    val rawRows = raw.queryExecution.toRdd
+    // Adaptive: an edge set that comfortably fits ONE task is solved
+    // exactly by a single-pass union-find (one job, no rounds) — at
+    // dedup-pipeline scales the edge list is a tiny fraction of the
+    // corpus, so this is the common case; the star rounds below are
+    // the arbitrarily-large fallback. The raw count bounds the
+    // distinct one, and union-find ignores duplicate edges, so this
+    // path needs no distinct, checkpoint or signature. The payload
+    // never touches the driver: coalesce(1) + a partition-local
+    // algorithm.
+    if (rawRows.count() <= localEdgeThreshold) {
+      val labeled = localUnionFind(raw.sparkSession, rawRows, raw.schema("src").dataType)
+      return nodes.select(col(idCol))
+        .join(labeled, col(idCol) === col("__id"), "left")
+        .select(col(idCol),
+          coalesce(col("__comp"), col(idCol)).as("component_id"))
+    }
+    var e = materialized(org.apache.spark.sql.GraftColumnBridge
+      .dataFrameFromInternalRows(raw.sparkSession, raw.schema, rawRows).distinct())
     // fixpoint signature: set equality via (count, order-independent
     // hash-XOR). bit_xor, not sum: summing 64-bit hashes overflows (an
     // error under ANSI mode), xor is overflow-free and commutative.
@@ -864,20 +885,6 @@ object Dedup {
       eSig.getLong(0) / 100000L + 1L))
     e = GraftSession.rebind(GraftSession.scoped(caller, aqeOff,
       "spark.sql.shuffle.partitions" -> loopParts.toString), e)
-    // Adaptive: an edge set that comfortably fits ONE task is solved
-    // exactly by a single-pass union-find (one job, no rounds) — at
-    // dedup-pipeline scales the edge list is a tiny fraction of the
-    // corpus, so this is the common case; the star rounds below are
-    // the arbitrarily-large fallback. The payload never touches the
-    // driver: coalesce(1) + a partition-local algorithm.
-    if (eSig.getLong(0) > 0 && eSig.getLong(0) <= localEdgeThreshold) {
-      val idType = e.schema("src").dataType
-      val labeled = localUnionFind(e, idType)
-      return nodes.select(col(idCol))
-        .join(labeled, col(idCol) === col("__id"), "left")
-        .select(col(idCol),
-          coalesce(col("__comp"), col(idCol)).as("component_id"))
-    }
     var iter = 0
     var converged = eSig.getLong(0) == 0L
     while (!converged && iter < maxIter) {

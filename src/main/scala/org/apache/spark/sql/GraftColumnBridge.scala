@@ -46,6 +46,12 @@ object GraftColumnBridge {
       .foreach(sc.removeSparkListener)
   }
 
+  /** Block until the context's event bus has delivered every event
+    * posted so far: listener events arrive asynchronously, so a
+    * listener must be drained before its counts are read. */
+  def drainEvents(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
+
   /** Rebuild a materialized Dataset as a bare `LogicalRDD` with
     * DEFAULT statistics.
     *

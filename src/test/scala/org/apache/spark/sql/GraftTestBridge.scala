@@ -9,6 +9,11 @@ object GraftTestBridge {
       .size
 
   /** Block until every event posted so far has been delivered. */
-  def drainEvents(spark: SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
+  def drainEvents(spark: SparkSession): Unit = GraftColumnBridge.drainEvents(spark)
+
+  /** The listeners registered on the context's event bus. */
+  def sparkListeners(spark: SparkSession): Seq[org.apache.spark.scheduler.SparkListenerInterface] = {
+    import scala.jdk.CollectionConverters._
+    spark.sparkContext.listenerBus.listeners.asScala.toSeq
+  }
 }
