@@ -667,6 +667,23 @@ object HierarchyDimension {
     (graft.sources.Sources.read(spark, s"$dir/reporting_dim"),
       graft.sources.Sources.read(spark, s"$dir/aggregation_dim"))
 
+  /** Whether `df` carries the broadcast hint [[HierarchyDimension.joinSide]]
+    * puts on a dimension leveled in one task, under any outer hints (h35's
+    * `.hint("merge")` sits on top of it). Such a dimension has at most
+    * `maxNodes` nodes, so a per-node readout of it is dim-sized. A
+    * distributed dimension, or a loaded or stored closure, carries none.
+    */
+  private[graft] def leveledInOneTask(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, LogicalPlan, ResolvedHint}
+    @scala.annotation.tailrec
+    def hinted(p: LogicalPlan): Boolean = p match {
+      case ResolvedHint(_, h) if h.strategy.contains(BROADCAST) => true
+      case ResolvedHint(child, _) => hinted(child)
+      case _ => false
+    }
+    hinted(df.queryExecution.analyzed)
+  }
+
   /** Point-in-time node set of a VERSIONED hierarchy: rows carry SCD2
     * validity windows (`valid_from` ≤ t < `valid_to`); the filter
     * selects the one version of each node live at `asOf`, yielding a

@@ -316,18 +316,30 @@ object HierarchyAgg {
       // as SQL's NULL string form in the detail rows
       .withColumn("segment",
         when(col("__gid") === 1, lit("ALL")).otherwise(col(segCol)))
-    labeled(agg, aggDim)
-      .orderBy(col("ancestor_node_sort_order"), col("segment"))
+    dfsOrdered(labeled(agg, aggDim), aggDim,
+        col("ancestor_node_sort_order"), col("segment"))
       .select("product_node_name", "segment", "sum_sales_amount",
         "sum_unit_quantity", "count_of_fact_records")
   }
 
   /** Label join ([[labeled]]) + final DFS ordering. */
   private def withLabels(aggregated: DataFrame, aggDim: DataFrame): DataFrame =
-    labeled(aggregated, aggDim, withLevel = true)
-      .orderBy("ancestor_node_sort_order")
+    dfsOrdered(labeled(aggregated, aggDim, withLevel = true), aggDim,
+        col("ancestor_node_sort_order"))
       .select("product_node_name", "product_level_name", "sum_sales_amount",
         "sum_unit_quantity", "distinct_customer_count", "count_of_fact_records")
+
+  /** A labeled per-node readout in DFS order. For a dimension leveled in
+    * one task ([[HierarchyDimension.leveledInOneTask]]) the readout has
+    * at most `maxNodes` rows, so it finishes in one task: `coalesce(1)`
+    * gives the sort a `SinglePartition` child, which meets its ordered
+    * distribution, and Spark plans neither the range exchange nor its
+    * sampling job. Any other dimension keeps the range-partitioned sort.
+    */
+  private def dfsOrdered(readout: DataFrame, aggDim: DataFrame,
+      order: Column*): DataFrame =
+    (if (HierarchyDimension.leveledInOneTask(aggDim)) readout.coalesce(1)
+     else readout).orderBy(order: _*)
 
   /** Per-node TOP CONTRIBUTORS (h26): the k customers with the largest
     * subtree spend under EVERY hierarchy node — the drill-down "who

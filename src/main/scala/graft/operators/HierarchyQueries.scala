@@ -197,7 +197,10 @@ object HierarchyQueries {
     // customer groups. Same result, no Expand anywhere. The statement
     // carries no join hints: the registered closure view keeps the
     // dimension's own strategy (a broadcast hint here), which reaches
-    // both the closure join and the label join.
+    // both the closure join and the label join. The final SELECT's
+    // COALESCE(1) hint finishes the |nodes|-row readout in one task, so
+    // the ORDER BY plans no range exchange (the DataFrame rollups'
+    // HierarchyAgg.dfsOrdered).
     "h33_sql_rollup" -> ((s, d) => {
       dimension(s, d).aggregationDim
         .createOrReplaceTempView("g_product_aggregation_dim")
@@ -230,7 +233,8 @@ object HierarchyQueries {
           FROM mv
           GROUP BY ancestor_node_sort_order
         )
-        SELECT lpad('-', (ancestor_level_number - 1) * 7, '-')
+        SELECT /*+ COALESCE(1) */
+               lpad('-', (ancestor_level_number - 1) * 7, '-')
                  || ancestor_node_name AS product_node_name,
                lpad('-', (ancestor_level_number - 1) * 7, '-')
                  || ancestor_level_name AS product_level_name,

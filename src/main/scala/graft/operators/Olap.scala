@@ -307,11 +307,13 @@ object Olap {
     * ranks/prefix-sums locally with the offset added. Exactness:
     * `order` must be a TOTAL order (unique tie column last) — then
     * ranks are the same integers the single-task window produced, on
-    * any partitioning. The entity frame is materialized once
-    * (`localCheckpoint`) so the sampling pass and both branches never
-    * recompute the upstream fact aggregate, and equal keys can never
-    * straddle a range boundary inconsistently (RangePartitioner
-    * assigns by key value; the tie column makes keys unique anyway).
+    * any partitioning. The range-partitioned frame is materialized
+    * once (`localCheckpoint`) WITH its partition ids: both branches
+    * read that one frame, so the offsets always describe the
+    * partitions they rank. Two range exchanges would not: each
+    * `RangePartitioner` samples its own bounds, so without exchange
+    * reuse a row could land in one `__pid` for the stats and another
+    * for the ranks (wrong ranks, even extra deciles).
     *
     * Returns (ranked frame = input columns + `__rank` [+ `__cum` when
     * `sumCol` is set], the checkpointed entity frame for totals).
@@ -320,14 +322,13 @@ object Olap {
       order: Seq[Column], sumCol: Option[Column])
       : (DataFrame, DataFrame) = {
     val spark = byEntity.sparkSession
-    // LAZY checkpoint: materializes inside the range-sampling pass
-    // (the first action that touches it) instead of as a dedicated
-    // eager job — one fewer job per call; the cache still guarantees
-    // the stats branch and the main branch read identical bytes
-    val c = byEntity.localCheckpoint(false)
     val parts = math.max(1, spark.sparkContext.defaultParallelism)
-    val ranged = c.repartitionByRange(parts, order: _*)
+    // LAZY checkpoint: no dedicated job; the first action that reads
+    // it materializes it, and every later read sees the same rows in
+    // the same partitions
+    val ranged = byEntity.repartitionByRange(parts, order: _*)
       .withColumn("__pid", spark_partition_id())
+      .localCheckpoint(false)
     val statAggs = Seq(count(lit(1)).as("__n")) ++
       sumCol.map(sc => sum(sc).as("__s"))
     val stats = ranged.groupBy("__pid")
@@ -351,7 +352,7 @@ object Olap {
         .withColumn("__cum", col("__offs") + sum(sc).over(wLocCum))
         .drop("__pid", "__offn", "__offs")
     }
-    (ranked, c)
+    (ranked, ranged)
   }
 
   /** Spark `ntile(k)` reproduced from a global 1-based `__rank` and

@@ -990,12 +990,18 @@ class HierarchySpec extends SparkSpec {
           j.hint.rightHint.flatMap(_.strategy)
       }
       assert(hints.size == 1, df.queryExecution.optimizedPlan)
-      (df.collect().toSeq, hints.head)
+      val rows = df.collect().toSeq
+      (rows, hints.head,
+        df.queryExecution.executedPlan.toString.contains("rangepartitioning"))
     }
-    val (singleRows, singleHint) = closureJoinHint(single)
-    val (distRows, distHint) = closureJoinHint(distributed)
+    val (singleRows, singleHint, singleRanged) = closureJoinHint(single)
+    val (distRows, distHint, distRanged) = closureJoinHint(distributed)
     assert(singleHint.contains(BROADCAST))
     assert(distHint.isEmpty, s"distributed closure join hinted $distHint")
+    // the same decision sorts the readout: in one task for the
+    // single-task dimension, range-partitioned for the distributed one
+    assert(!singleRanged, "the single-task readout planned a range exchange")
+    assert(distRanged, "the distributed readout lost its range-partitioned sort")
     assert(singleRows == distRows)
     assert(singleRows.size == 6)
   }
