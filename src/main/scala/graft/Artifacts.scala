@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.GraftColumnBridge
 
@@ -245,5 +247,11 @@ object Artifacts {
   private[graft] def pinCount(spark: SparkSession): Int = {
     val st = stores.get(spark)
     if (st == null) 0 else st.synchronized(st.pins.size)
+  }
+
+  private[graft] def memoKeys(spark: SparkSession): Set[(String, Any)] = {
+    val st = stores.get(spark)
+    if (st == null) Set.empty
+    else st.synchronized(st.memo.keySet.asScala.toSet)
   }
 }

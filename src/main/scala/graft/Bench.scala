@@ -3,6 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 object Bench {
+  /** 1-min load average above which a run still measures but folds no floors. */
+  private val FoldMaxLoad = 2.0
+  /** Seconds to wait for an idle host before the sweep starts. */
+  private val StartWaitSec = 300
+  /** Seconds to wait for an idle host before re-measuring over-2× entries. */
+  private val RemeasureWaitSec = 600
+  /** Most entries re-measured after one sweep, worst ratios first. */
+  private val RemeasureCap = 150
+  /** Consecutive idle over-2× readings that re-floor an entry to their median. */
+  private val RevalidateK = 3
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default to every core on the host — a hardcoded low fallback
@@ -20,47 +31,31 @@ object Bench {
     // and says so loudly in both stderr and the JSON line.
     var startLoad = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val foldMaxLoad = sys.env.get("SPARK_GRAFT_FOLD_MAXLOAD")
-      .map(_.toDouble).getOrElse(2.0)
     // PRE-SWEEP LOAD DECAY (r21, the r20 verdict's #1c): a sweep that
     // STARTS contended ships 300 contaminated readings and then has to
     // re-measure its way back to defensibility — waiting out a
     // transient load spike BEFORE the clock starts is strictly
     // cheaper. Same poll loop as the remeasure phase; bounded by
-    // SPARK_GRAFT_START_WAIT seconds (default 300; 0 disables), and a
-    // never-idle host degrades to the old behavior (measure anyway,
-    // refuse to fold).
-    val startWait = sys.env.get("SPARK_GRAFT_START_WAIT")
-      .map(_.toInt).getOrElse(300)
-    if (startLoad >= 0 && startLoad > foldMaxLoad && startWait > 0) {
-      val deadline = System.nanoTime() + startWait * 1000000000L
-      while (startLoad >= 0 && startLoad > foldMaxLoad &&
+    // StartWaitSec, and a never-idle host degrades to the old behavior
+    // (measure anyway, refuse to fold).
+    if (startLoad >= 0 && startLoad > FoldMaxLoad) {
+      val deadline = System.nanoTime() + StartWaitSec * 1000000000L
+      while (startLoad >= 0 && startLoad > FoldMaxLoad &&
           System.nanoTime() < deadline) {
         System.err.println(
-          f"[bench] start: waiting for idle (load $startLoad%.2f > $foldMaxLoad%.2f)")
+          f"[bench] start: waiting for idle (load $startLoad%.2f > $FoldMaxLoad%.2f)")
         Thread.sleep(10000)
         startLoad = java.lang.management.ManagementFactory
           .getOperatingSystemMXBean.getSystemLoadAverage
       }
     }
-    val loadOkToFold = startLoad < 0 || startLoad <= foldMaxLoad
+    val loadOkToFold = startLoad < 0 || startLoad <= FoldMaxLoad
     if (!loadOkToFold)
       System.err.println(
         f"[bench] ======== CONTENDED RUN: start load_avg $startLoad%.2f > " +
-          f"$foldMaxLoad%.2f — measuring, but floor fold is DISABLED " +
-          "(re-run idle to fold; override with SPARK_GRAFT_FOLD_MAXLOAD) ========")
+          f"$FoldMaxLoad%.2f — measuring, but floor fold is DISABLED " +
+          "(re-run idle to fold) ========")
     val spark = GraftSession.local(cpus.toInt)
-    // warm protocol (SparkEntry.warm): every query once at the smallest
-    // SF so measured times reflect steady state (codegen compiled, JIT
-    // warm) rather than first-call compilation, then the shared
-    // artifacts at the TIMED SF — the sf0.001 pass doesn't touch the
-    // timed sfDir's session caches (keyed by sfDir), so without it the
-    // alphabetically-first consumer (h10 for the hierarchy dims, d10
-    // for the dedup components) is billed for a one-time build every
-    // other query reads for free. Best-effort: never aborts the bench.
-    // Success + duration of the artifact warm are REPORTED in the
-    // output JSON: a silently failed warm would otherwise bill the
-    // first consumer for the cold build with no marker in the results.
     val (warmOk, warmSec) = SparkEntry.warm(spark, SparkEntry.queries.keys.toSeq, sfDir)
     // noise control: the per-round driver runs on a contended host
     // (observed ±50% per-query swings round to round); each query is
@@ -143,8 +138,7 @@ object Bench {
     // loop in the tool: after the sweep, every entry whose best run
     // exceeded 2× its committed floor is re-measured — the tool first
     // waits for the 1-min host load to decay below the fold threshold
-    // (poll every 10 s, up to SPARK_GRAFT_REMEASURE_WAIT seconds,
-    // default 600; 0 disables the phase) — and the re-measures ship
+    // (poll every 10 s, up to RemeasureWaitSec) — and the re-measures ship
     // IN the same artifact (`remeasured` map + `remeasure_load`), so
     // a contaminated run carries its own verdict. Re-measured minima
     // fold into BENCH_FULL only when taken under an ok load; on a
@@ -155,16 +149,14 @@ object Bench {
     val over2x = results.collect { case (name, v)
       if v > 0 && committedMin.get(name).exists(b => b >= 0.2 && v > 2 * b)
       => name }
-    val remeasureWait = sys.env.get("SPARK_GRAFT_REMEASURE_WAIT")
-      .map(_.toInt).getOrElse(600)
     var remeasureLoad = -1.0
     val remeasured: Map[String, Double] =
-      if (over2x.isEmpty || remeasureWait <= 0) Map.empty
+      if (over2x.isEmpty) Map.empty
       else {
-        val deadline = System.nanoTime() + remeasureWait * 1000000000L
+        val deadline = System.nanoTime() + RemeasureWaitSec * 1000000000L
         var l = loadNow
-        while (l >= 0 && l > foldMaxLoad && System.nanoTime() < deadline) {
-          System.err.println(f"[bench] remeasure: waiting for idle (load $l%.2f > $foldMaxLoad%.2f)")
+        while (l >= 0 && l > FoldMaxLoad && System.nanoTime() < deadline) {
+          System.err.println(f"[bench] remeasure: waiting for idle (load $l%.2f > $FoldMaxLoad%.2f)")
           Thread.sleep(10000)
           l = loadNow
         }
@@ -176,14 +168,13 @@ object Bench {
         // `remeasure_capped` below — an over-2× entry absent from the
         // remeasured map must be distinguishable from one the phase
         // never considered, or its disposition re-opens manually.
-        // Cap raised 40 → 150 and env-tunable (r21, r20 verdict #1:
+        // Cap raised 40 → 150 (r21, r20 verdict #1:
         // the r20 sweep had 67 >2× entries and shipped 27 with no
         // disposition): re-measuring is ~2× the contaminated entries'
         // own runtime — minutes — and an undispositioned >2× reading
         // costs a round of manual adjudication.
         over2x.sortBy(n => -(resultMap(n) / committedMin(n)))
-          .take(sys.env.get("SPARK_GRAFT_REMEASURE_CAP")
-            .map(_.toInt).getOrElse(150))
+          .take(RemeasureCap)
           .map { n =>
             val fn = SparkEntry.queries(n)
             val a = once(n, fn)
@@ -192,10 +183,9 @@ object Bench {
             n -> (if (ok.isEmpty) -1.0 else ok.min)
           }.toMap
       }
-    val remeasureCapped = math.max(0,
-      (if (remeasureWait <= 0) 0 else over2x.size) - remeasured.size)
+    val remeasureCapped = math.max(0, over2x.size - remeasured.size)
     val remeasureLoadOk = remeasured.nonEmpty &&
-      (remeasureLoad < 0 || remeasureLoad <= foldMaxLoad)
+      (remeasureLoad < 0 || remeasureLoad <= FoldMaxLoad)
     // ADJUSTED TOTAL (r21, r20 verdict #1b): the artifact's own
     // defensible headline — the sweep total with every VERIFIED-IDLE
     // green re-measure substituted for its contaminated sweep reading.
@@ -247,7 +237,6 @@ object Bench {
       } finally it.close()
       md.digest().map("%02x".format(_)).mkString
     } catch { case _: Throwable => "" }
-    val revalK = sys.env.get("SPARK_GRAFT_REVALIDATE_K").map(_.toInt).getOrElse(3)
     val prevReval: Map[String, Seq[Double]] = {
       val txt = try new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("BENCH_REVALIDATE.json")), "UTF-8")
@@ -274,7 +263,7 @@ object Bench {
         idleObs.get(name).foreach { r =>
           if (floor > 0 && r > 2 * floor) {
             val hist = prevReval.getOrElse(name, Nil) :+ r
-            if (hist.size >= revalK) {
+            if (hist.size >= RevalidateK) {
               val med = hist.sorted.apply(hist.size / 2)
               refloored += name -> (med -> (
                 f"auto-revalidated: floor $floor%.3f unmet in ${hist.size} " +
@@ -287,7 +276,7 @@ object Bench {
       }
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_REVALIDATE.json"),
-        (s"""{"src_hash":"$srcHash","note":"floor re-validation state: consecutive idle >2x-of-floor readings per entry (K=$revalK re-floors to median + floor_note); counters reset on any src/main/scala change","entries":{""" +
+        (s"""{"src_hash":"$srcHash","note":"floor re-validation state: consecutive idle >2x-of-floor readings per entry (K=$RevalidateK re-floors to median + floor_note); counters reset on any src/main/scala change","entries":{""" +
           revalState.toSeq.sortBy(_._1).map { case (k, vs) =>
             "\"" + k + "\":[" + vs.map(v => f"$v%.3f").mkString(",") + "]"
           }.mkString(",") + "}}\n").getBytes("UTF-8"))

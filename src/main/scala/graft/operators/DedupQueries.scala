@@ -47,17 +47,6 @@ object DedupQueries {
       Dedup.ngramJaccard(Tables.documents(s, d))
         .select(col("doc_a"), col("doc_b"), col("jaccard")))
 
-  /** Force the shared exact-Jaccard component derivation and the
-    * d22/d25 eval pair frames at `sfDir` so timed runs read the
-    * session cache instead of the first consumer (alphabetically
-    * d10 / d22!) paying the whole shared derivation.
-    */
-  def warmComponents(spark: SparkSession, sfDir: String): Unit = {
-    cachedClusters(spark, sfDir, minJaccard = 0.05).count()
-    cachedEvalCand(spark, sfDir).count()
-    cachedEvalTruth(spark, sfDir).count()
-  }
-
   /** The shared (doc_id, component_id) near-dup components at the
     * registry threshold — the cross-family handle (p13's soft-dedup
     * weights read it). */

@@ -98,19 +98,6 @@ object GraphQueries {
       cachedAdjDeg(s, sfDir).select(col("src").as("node")).distinct(),
       cachedEdges(s, sfDir), idCol = "node", srcCol = "a", dstCol = "b")
 
-  /** Force the shared graph build so timed g-runs read the session
-    * cache (the warmDims/warmComponents/warmGraph convention). */
-  def warmEdges(spark: SparkSession, sfDir: String): Unit = {
-    cachedEdges(spark, sfDir).count()
-    cachedAdjDeg(spark, sfDir).count()
-    cachedLabels(spark, sfDir).count()
-    cachedPr7(spark, sfDir).count()
-    cachedWedge(spark, sfDir).count()
-    cachedNNodes(spark, sfDir)
-    demandSeeds(spark, sfDir)
-    ()
-  }
-
   /** The g7/g8/g17 seed set: the `n` highest-demand parts (lineitem
     * count desc, partkey ties), COLLECTED into a literal frame
     * (codebook convention) so iterative rounds reference a

@@ -107,26 +107,6 @@ object HierarchyQueries {
       HierarchyDimension.historyClosure(
         versionedRegionNationNodes(spark, sfDir), knownDepth = 3))
 
-  /** Force-derive (and memoize) every dimension the hierarchy
-    * registry reads at `sfDir`. The bench calls this for the timed SF
-    * before the clock starts: the reference materializes its dims once
-    * as tables (hierarchy_dimension_table.py:75-82) and every query
-    * reads them, so timed sections should measure the query, not the
-    * one-time derivation the artifact registry amortizes across consumers.
-    */
-  def warmDims(spark: SparkSession, sfDir: String): Unit = {
-    val dims = Seq(
-      dimension(spark, sfDir), deepDimension(spark, sfDir),
-      partDimension(spark, sfDir), raggedDimension(spark, sfDir),
-      asOfDimension(spark, sfDir, "1996-06-01"))
-    dims.foreach(_.aggregationDim.count())
-    dims.foreach(_.closurePairs.count())
-    dimension(spark, sfDir).reportingDim.count()
-    historicalMv(spark, sfDir).count()
-    fullMv(spark, sfDir).count()
-    historyClosures(spark, sfDir).count()
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TIME-VERSIONED rollup: the flagship aggregation against the
     // hierarchy AS IT WAS on 1996-06-01 — after n8's reparent, so

@@ -1383,16 +1383,6 @@ object SimilarityQueries {
       graft.Artifacts.stored(s, "similarity.ivfpqCentroids", key)(cents))
   }
 
-  /** Force the shared graph + IVF-PQ index builds at `sfDir` so timed
-    * s8/s11/s13/s22 runs read the session cache (the
-    * warmDims/warmComponents convention). */
-  def warmGraph(spark: SparkSession, sfDir: String): Unit = {
-    cachedGraph(spark, sfDir).count()
-    cachedIvfpq(spark, sfDir, "full")
-    cachedIvfpq(spark, sfDir, "base")
-    ()
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s1_knn_brute" -> ((s, d) => Similarity.bruteForceTopK(Tables.embeddings(s, d))),
     "s2_knn_lsh" -> ((s, d) => Similarity.lshTopK(Tables.embeddings(s, d))),

@@ -13,8 +13,9 @@ import graft.{GraftSession, SparkEntry, Trace}
   * `runMain graft.tools.Probe <outDir> <entry...>`.
   *
   * Same session, SF (`SPARK_GRAFT_SF_DIR`), cores (`SPARK_GRAFT_CPUS`)
-  * and warm protocol ([[SparkEntry.warm]]) as [[graft.Bench]]. Each
-  * entry then runs twice, split into build (the entry call), plan
+  * and warm ([[SparkEntry.warm]]: one untimed first call of each named
+  * entry, which builds only the artifacts it reads) as [[graft.Bench]].
+  * Each entry then runs twice, split into build (the entry call), plan
   * (`executedPlan`) and exec (`toRdd.count`), each under
   * [[graft.Graft.trace]]; the run with the smaller wall time is kept.
   * Writes `<outDir>/<entry>.txt` (the formatted executed plan) and one
