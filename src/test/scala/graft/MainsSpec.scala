@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class MainsSpec extends AnyFunSuite {
   test("source gate: every def main under src/main is listed") {
     val allowed = Seq(
-      "graft/Bench.scala" -> "the sweep: every entry's min-of-2 wall time as one JSON line",
+      "graft/Bench.scala" -> "the sweep: every entry's min-of-2 wall time, one JSON line, floors per (sf, cpus)",
       "graft/Verify.scala" -> "every entry's result as parquet for the DuckDB oracle compare",
       "graft/Quickstart.scala" -> "the README's in-memory first contact with the API",
       "graft/tools/Probe.scala" -> "the one timing and plan tool, on Graft.trace",

@@ -27,12 +27,16 @@ class PhysicalInvarianceSpec extends SparkSpec {
   // g13/d6: the connected-components loops, compared as row sets;
   // h4, h6, h35 and h9: the rollups whose closure join strategy the
   // dimension picks, compared in order — the DFS order of a one-task
-  // readout comes from its one-task sort, not from a range exchange
+  // readout comes from its one-task sort, not from a range exchange;
+  // q37, t5, s1, m2, p5 and st1: one entry of each other family, as row
+  // sets
   private val ordered = Set("h4_hier_agg", "h6_hier_agg_parts",
     "h35_shuffle_dim_rollup", "h9_incremental_rollup")
   for (name <- Seq("g13_connected_components", "d6_dup_clusters",
       "h4_hier_agg", "h6_hier_agg_parts", "h35_shuffle_dim_rollup",
-      "h9_incremental_rollup"))
+      "h9_incremental_rollup", "q37_topk_per_group", "t5_ngram_stats",
+      "s1_knn_brute", "m2_feature_extract", "p5_epoch_shuffle",
+      "st1_windowed_agg"))
     test(s"$name: the default session's rows under each setting") {
       def result(s: SparkSession) =
         if (ordered(name)) rows(s, name) else rows(s, name).sorted
