@@ -57,8 +57,12 @@ object Artifacts {
     * (null for a plain pin). */
   private final class Handle(val df: DataFrame) {
     df.cache()
-    private val buffers = GraftColumnBridge.cacheBuffers(df)
+    val buffers = GraftColumnBridge.cacheBuffers(df)
     @volatile var leaf: DataFrame = null
+    /** The frames [[pin]] and [[leaf]] handed out over this cache (a
+      * pin of an equal plan shares it), under the store's lock; the
+      * cache is freed when the last is released. */
+    var held: List[DataFrame] = Nil
 
     def free(): Unit =
       try { df.unpersist(); buffers.foreach(_.clearCache()) }
@@ -116,8 +120,8 @@ object Artifacts {
         else {
           st.pins.addLast(h)
           // CacheManager unpersists by PLAN equality: an evicted pin
-          // sharing its plan with a newer one drops the shared entry,
-          // the conservative (storage-bounding) direction
+          // sharing its plan with another session's drops the shared
+          // entry, the conservative (storage-bounding) direction
           while (st.pins.size > MaxPins) st.pins.pollFirst().free()
           true
         }
@@ -164,32 +168,52 @@ object Artifacts {
     }.asInstanceOf[DataFrame]
 
   /** cache() + register as a pin, returning the same frame. */
-  def pin(df: DataFrame): DataFrame = {
-    register(new Handle(df))
-    df
-  }
+  def pin(df: DataFrame): DataFrame = hold(df, asLeaf = false)
 
   /** A pinned frame materialized and re-rooted at its leaf — for a
     * per-run artifact read many times (a stream's static index); free
     * it with [[release]] when the run ends. */
-  def leaf(df: DataFrame): DataFrame = {
-    val h = materialize(df)
-    register(h)
-    h.leaf
+  def leaf(df: DataFrame): DataFrame = hold(df, asLeaf = true)
+
+  /** Hand out `df`, or (`asLeaf`) its materialized leaf, as a pin. A
+    * live pin of the session that caches an equal plan (an earlier
+    * call's, or an earlier pin of this one) is shared, not cached
+    * again: a second `cache()` of an equal plan only warns, and two
+    * handles on one CacheManager entry would each unpersist the
+    * other's data when freed. */
+  private def hold(df: DataFrame, asLeaf: Boolean): DataFrame = {
+    val buf = GraftColumnBridge.cacheBuffers(df).orNull
+    val st = if (buf == null) null else stores.get(df.sparkSession)
+    val live = if (st == null) null else st.synchronized {
+      st.pins.asScala.find(_.buffers.exists(_ eq buf)).orNull
+    }
+    if (live != null) {
+      val held = if (!asLeaf) df else Option(live.leaf).getOrElse {
+        df.count()
+        GraftColumnBridge.cachedLeaf(df)
+      }
+      // a pin evicted or released meanwhile leaves `held` recomputing,
+      // as any released pin's frame does
+      st.synchronized(if (st.pins.contains(live)) live.held ::= held)
+      held
+    } else {
+      val h = if (asLeaf) materialize(df) else new Handle(df)
+      h.held = List(if (asLeaf) h.leaf else df)
+      register(h)
+      h.held.head
+    }
   }
 
   /** Release one pin now, by the frame [[pin]] or [[leaf]] returned.
-    * The frame stays usable; it recomputes. */
+    * The frame stays usable; it recomputes. A cache shared by several
+    * pins is freed with the last of them. */
   def release(df: DataFrame): Unit = {
     val st = stores.get(df.sparkSession)
     val h = if (st == null) null else st.synchronized {
-      var found: Handle = null
-      val it = st.pins.iterator
-      while (found == null && it.hasNext) {
-        val c = it.next()
-        if ((c.df eq df) || (c.leaf eq df)) { it.remove(); found = c }
-      }
-      found
+      st.pins.asScala.find(_.held.exists(_ eq df)).flatMap { c =>
+        c.held = c.held.patch(c.held.indexWhere(_ eq df), Nil, 1)
+        if (c.held.nonEmpty) None else { st.pins.remove(c); Some(c) }
+      }.orNull
     }
     if (h != null) h.free()
   }

@@ -24,6 +24,9 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      // file:// without a chmod or readlink process per file operation
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
 
   /** A session for one query's settings: a clone of `spark` (same
     * context, cache and tables; its own conf, temp views and streaming

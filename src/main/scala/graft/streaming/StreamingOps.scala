@@ -1046,11 +1046,10 @@ object StreamingQueries {
     * only buys per-batch fixed cost. Two batches are the minimum that
     * still exercises both maintenance paths (store init, then a
     * fold/merge into existing state) — st9's 2-file precedent, now
-    * uniform. StreamProf (plans/r22/streamprof_before.txt) measured
-    * the per-batch fixed cost at 0.10–0.15 s of checkpoint-log fsync
-    * plus 0.3–0.5 s of addBatch on row counts this small; at real
-    * arrival rates trigger sizing is exactly this knob (guide §1.2:
-    * remove unnecessary passes).
+    * uniform. Each batch pays a fixed cost of offset, WAL and commit
+    * log writes plus its addBatch jobs, which at row counts this small
+    * outweighs the data work; at real arrival rates trigger sizing is
+    * exactly this knob (guide §1.2: remove unnecessary passes).
     */
 
   /** Shuffle partitions of a stream's scoped session. Stateful
@@ -1065,20 +1064,15 @@ object StreamingQueries {
   private[streaming] val BatchParts = 8
 
   /** Root of the scratch STREAMING CHECKPOINTS (offset WAL, commit
-    * log, state store). A registry entry's stream starts fresh on a
-    * fresh checkpoint every call, so these go to the fastest local
-    * filesystem available: `/dev/shm` when writable (the checkpoint
-    * fsync is a pure per-batch tax on a disk-backed /tmp: StreamProf
-    * measured walCommit+commitOffsets ≈ 0.07 s/batch on ext4), else
-    * the JVM tmpdir. SPARK_GRAFT_STREAM_TMP overrides the root; sink
-    * OUTPUT directories are not affected, only checkpoints.
+    * log, state store): the JVM tmpdir. A registry entry's stream
+    * starts fresh on a fresh checkpoint every call. The per-batch log
+    * writes cost what the filesystem's create, mkdirs and rename cost;
+    * on `file://` that is [[graft.GraftLocalFileSystem]]'s, which forks
+    * no `chmod` or `readlink` process, so the checkpoints need no RAM
+    * disk. Sink OUTPUT directories are not under this root (they live
+    * in the session directory).
     */
-  private[graft] def scratchRoot: Path =
-    sys.env.get("SPARK_GRAFT_STREAM_TMP").map(Paths.get(_)).getOrElse {
-      val shm = Paths.get("/dev/shm")
-      if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
-      else Paths.get(sys.props("java.io.tmpdir"))
-    }
+  private[graft] def scratchRoot: Path = Paths.get(sys.props("java.io.tmpdir"))
 
   /** `f` over a fresh checkpoint directory under [[scratchRoot]],
     * deleted once `f` returns or throws. */

@@ -36,6 +36,29 @@ class ArtifactsSpec extends SparkSpec {
     assert(df.collect().length == 2, "released frames stay usable")
   }
 
+  test("pins of one plan share one handle; releasing one leaves the other cached") {
+    Artifacts.releaseAll(spark)
+    def frame() = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
+      .withColumn("u", upper(col("s")))
+    val a = Artifacts.pin(frame())
+    val b = Artifacts.pin(frame())
+    assert((a ne b) && Artifacts.pinCount(spark) == 1, "an equal plan must share the pin")
+    Artifacts.release(a)
+    assert(b.storageLevel != StorageLevel.NONE, "releasing one must not free the other")
+    Artifacts.release(b)
+    assert(b.storageLevel == StorageLevel.NONE && Artifacts.pinCount(spark) == 0)
+    // a leaf over a live plain pin shares its cache too
+    val c = Artifacts.pin(frame())
+    val l1 = Artifacts.leaf(frame())
+    val l2 = Artifacts.leaf(frame())
+    assert(Artifacts.pinCount(spark) == 1)
+    assert(l1.collect().length == 2 && l2.collect().length == 2)
+    Seq(c, l1).foreach(Artifacts.release)
+    assert(c.storageLevel != StorageLevel.NONE, "a holder remains")
+    Artifacts.release(l2)
+    assert(c.storageLevel == StorageLevel.NONE && Artifacts.pinCount(spark) == 0)
+  }
+
   test("operator-internal pins are registered and release cleanly") {
     Artifacts.releaseAll(spark)
     val docs = Seq(
